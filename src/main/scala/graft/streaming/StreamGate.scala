@@ -1,10 +1,13 @@
 package graft.streaming
 
 import graft.Tables
+import graft.io.ForklessLocalFs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+
+import scala.util.control.NonFatal
 
 /** Oracle-gate entry points for the G-family (SURVEY §2 G): each runs a
   * REAL Structured Streaming query to completion (file source →
@@ -39,72 +42,33 @@ object StreamGate {
     dir
   }
 
-  /** Run one gate's streaming section with `spark.sql.shuffle.partitions`
-    * — which fixes the query's STATE-STORE count at start — sized to the
-    * INPUT VOLUME instead of the session's core count (r16, from the r15
-    * core curve: stream_outer_join ran 2.8 s at 8 partitions vs 8.1 s at
-    * 32 on identical data, because every micro-batch pays a per-partition
-    * state-store open/commit/publish protocol regardless of how little
-    * state lives there). Policy: one partition per 16 MiB of staged
-    * input, with a FLOOR of 8 (floor 1 measured WORSE at sf0.1 — it
-    * serialized the per-key compute of the heavy keyed gates:
-    * winsorized/psi/calibration regressed ~15%) and a cap at the
-    * session's parallelism that yields to the floor on very small
-    * machines — tiny gate corpora get 8 stores per trigger, a 100×
-    * corpus grows stores linearly, and a real cluster saturates its
-    * cores.
-    *
-    * Per-gate floors were HYPOTHESIZED and REFUTED (r17): the seven
-    * keyed-agg gates that regressed 7–18% r15→r16 (cramers/chi2/hampel/
-    * constraints/page_hinkley/changepoint/mann_kendall) were A/B'd
-    * isolated at sf0.1 with floor 8 vs a core-count (32) floor — floor 8
-    * won 6 of 7 on 2×2 minima (chi2 4.08 vs 4.85 s, page_hinkley 2.85
-    * vs 3.36; hampel the lone inversion, inside the ±25% run-to-run
-    * variance a repeat run showed). Their r16 suite regressions are
-    * suite-context drift, not partition-count — the same wander class
-    * the bench's evidence block tracks — so the floor stays a single
-    * uniform policy. The `floor` parameter remains for callers with a
-    * measured case; no gate currently overrides it.
-    *
-    * Values are unchanged by partition count (every gate's fold is
-    * key-local and its oracle hash-exact); the session conf is restored
-    * on exit even if the gate throws. The conf must stay applied through
-    * `awaitTermination` because the stream's session clone happens on
-    * the query thread, not inside `start()`.
-    *
-    * CONTRACT: gates run SERIALLY on the shared session (Bench and
-    * Verify both drive them one at a time) — this set/restore of a
-    * session-level conf is not safe under concurrent gate runs the way
-    * `Scorecard.parRun` drives batch gates; a concurrent driver must
-    * clone the session (`spark.newSession()`) per gate instead. */
-  private def sizedToInput[T](spark: SparkSession, base: String,
-      floor: Long = 8L)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
+  /** Run one gate's streaming section under two scoped session confs:
+    * - `spark.sql.shuffle.partitions`, which fixes the state-store count,
+    *   sized to the staged input: one per 16 MiB, at least 8, at most the
+    *   session's parallelism unless that is below 8;
+    * - [[ForklessLocalFs]] for `file:` checkpoints (no fork per file).
+    * Both stay set through `awaitTermination` (the stream clones the
+    * session on its own thread) and are restored even if the body throws;
+    * then the state-store providers are unloaded so the gate's state does
+    * not tax what runs next. Gates run serially on the shared session; a
+    * concurrent caller must give each gate its own `spark.newSession()`. */
+  private[graft] def sizedToInput[T](spark: SparkSession, base: String)(body: => T): T = {
     val p = new org.apache.hadoop.fs.Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = try fs.getContentSummary(p).getLength catch { case _: Throwable => 0L }
+    val bytes = try fs.getContentSummary(p).getLength catch { case NonFatal(_) => 0L }
     val per = 16L << 20
-    // env override wins over the per-gate floor; a malformed value falls
-    // back rather than throwing mid-suite
-    val f = sys.env.get("SPARK_GRAFT_STREAM_MIN_PARTS")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).getOrElse(floor)
-    val target = math.max(f, math.min(
+    val parts = math.max(8L, math.min(
       spark.sparkContext.defaultParallelism.toLong, (bytes + per - 1) / per))
-    spark.conf.set(key, target.toString)
-    // a completed gate must not pin its state in the executor: the
-    // provider cache holds an in-memory copy of every partition's final
-    // state until maintenance eviction, and that residue measurably
-    // taxes whatever runs next on the session (r17: pipeline_media_
-    // curation benched 2.4 s solo vs 5.4-6.1 s after ONE stream gate;
-    // the cross-entry wander class tracked since r14 follows the same
-    // alphabetical shadow - every t*/batch entry after the stream_*
-    // block, and every pass-2 entry, ran against ~38 gates' loaded
-    // providers)
-    try body finally {
-      spark.conf.set(key, prev)
+    val scoped = Seq("spark.sql.shuffle.partitions" -> parts.toString,
+      ForklessLocalFs.ConfKey -> classOf[ForklessLocalFs].getName)
+    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally {
+      prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       try org.apache.spark.sql.GraftShims.unloadStateStores()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
   }
 
