@@ -16,8 +16,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q3JoinAgg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2; the G
+    * (streaming) entries are [[graft.streaming.StreamGate.gates]]. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    batchQueries ++ graft.streaming.StreamGate.gates
+
+  private def batchQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A — ingestion
     "src_parquet_pruned"     -> Ingest.parquetPruned _,
     "src_csv_read"           -> Ingest.csvRead _,
@@ -316,63 +320,22 @@ object SparkEntry {
     "mm_audio_fingerprint"   -> ((s, d) => Multimodal.audioFingerprint(s, d)),
     "load_partition_evolution" -> (LoadOps.partitionEvolution _),
     "mm_resize"              -> ((s: SparkSession, d: String) => Multimodal.resize(s, d)),
-    // G — streaming (real Structured Streaming runs to completion; the
-    // materialized result is the gated frame — see StreamGate's scaladoc
-    // for the per-entry determinism contract)
-    "stream_window_agg"      -> graft.streaming.StreamGate.streamWindowAgg _,
-    "stream_dedup"           -> graft.streaming.StreamGate.streamDedup _,
-    "stream_sessionize"      -> graft.streaming.StreamGate.streamSessionize _,
-    "stream_paragraph_dedup" -> graft.streaming.StreamGate.streamParagraphDedup _,
-    "stream_markov"          -> graft.streaming.StreamGate.streamMarkov _,
-    "stream_cusum"           -> graft.streaming.StreamGate.streamCusum _,
-    "stream_constraints"     -> graft.streaming.StreamGate.streamConstraints _,
-    "stream_heavy_hitters"   -> graft.streaming.StreamGate.streamHeavyHitters _,
-    "stream_benford"         -> graft.streaming.StreamGate.streamBenford _,
-    "stream_holt"            -> graft.streaming.StreamGate.streamHolt _,
-    "stream_seasonal"        -> graft.streaming.StreamGate.streamSeasonal _,
-    "stream_hampel"          -> graft.streaming.StreamGate.streamHampel _,
-    "stream_top_paths"       -> graft.streaming.StreamGate.streamTopPaths _,
-    "stream_cramers"         -> graft.streaming.StreamGate.streamCramers _,
-    "stream_winsorized"      -> graft.streaming.StreamGate.streamWinsorized _,
-    "stream_changelog"       -> graft.streaming.StreamGate.streamChangelog _,
-    "stream_breaker"         -> graft.streaming.StreamGate.streamBreaker _,
-    "stream_novelty"         -> graft.streaming.StreamGate.streamNovelty _,
-    "stream_enrich"          -> graft.streaming.StreamGate.streamEnrich _,
-    "stream_abtest"          -> graft.streaming.StreamGate.streamAbtest _,
-    "stream_drift"           -> graft.streaming.StreamGate.streamDrift _,
-    "stream_decay"           -> graft.streaming.StreamGate.streamDecay _,
-    "stream_join"            -> graft.streaming.StreamGate.streamJoin _,
-    "stream_chi2"            -> graft.streaming.StreamGate.streamChi2 _,
-    "stream_changepoint"     -> graft.streaming.StreamGate.streamChangepoint _,
-    "stream_cms"             -> graft.streaming.StreamGate.streamCms _,
-    "stream_staleness"       -> graft.streaming.StreamGate.streamStaleness _,
-    "stream_outer_join"      -> graft.streaming.StreamGate.streamOuterJoin _,
-    "stream_hll"             -> graft.streaming.StreamGate.streamHll _,
-    "stream_quantile"        -> graft.streaming.StreamGate.streamQuantile _,
-    "stream_bloom"           -> graft.streaming.StreamGate.streamBloom _,
     "mon_page_hinkley"       -> ((s: SparkSession, d: String) => LoadOps.pageHinkley(s, d)),
-    "stream_page_hinkley"    -> graft.streaming.StreamGate.streamPageHinkley _,
     "mon_stream_scorecard"   -> graft.operators.Scorecard.streamScorecard _,
     "q_auc_roc"              -> ((s: SparkSession, d: String) => Relational.qAucRoc(s, d)),
     "mon_calibration"        -> ((s: SparkSession, d: String) => LoadOps.calibration(s, d)),
     "mon_mann_kendall"       -> ((s: SparkSession, d: String) => LoadOps.mannKendall(s, d)),
     "mon_psi"                -> ((s: SparkSession, d: String) => LoadOps.psi(s, d)),
     "text_bm25"              -> ((s: SparkSession, d: String) => TextAnalysis.bm25(s, d)),
-    "stream_psi"             -> graft.streaming.StreamGate.streamPsi _,
     "mon_drift_panel"        -> ((s: SparkSession, d: String) => LoadOps.driftPanel(s, d)),
-    "stream_auc"             -> graft.streaming.StreamGate.streamAuc _,
-    "stream_mann_kendall"    -> graft.streaming.StreamGate.streamMannKendall _,
     "text_ndcg"              -> ((s: SparkSession, d: String) => TextAnalysis.ndcgAt10(s, d)),
     "q_srm"                  -> ((s: SparkSession, d: String) => Relational.qSrm(s, d)),
     "q_cuped"                -> ((s: SparkSession, d: String) => Relational.qCuped(s, d)),
     "q_power_mde"            -> ((s: SparkSession, d: String) => Relational.qPowerMde(s, d)),
-    "stream_srm"             -> graft.streaming.StreamGate.streamSrm _,
     "dedup_lsh_recall"       -> ((s: SparkSession, d: String) => Dedup.lshRecall(s, d)),
     "dedup_lsh_recall_curve" -> ((s: SparkSession, d: String) => Dedup.lshRecallCurve(s, d)),
     "mon_seasonal_mk"        -> ((s: SparkSession, d: String) => LoadOps.seasonalMannKendall(s, d)),
     "mon_forecast_eval"      -> ((s: SparkSession, d: String) => LoadOps.forecastEval(s, d)),
-    "stream_forecast_eval"   -> graft.streaming.StreamGate.streamForecastEval _,
-    "stream_calibration"     -> graft.streaming.StreamGate.streamCalibration _,
   )
 
   // shared SQL fragments for the oracle ---------------------------------

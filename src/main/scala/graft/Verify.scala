@@ -6,9 +6,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // driver contract: exactly (sfDir, outDir); extra args are an optional
-    // query-name filter for fast local iteration
+    // query-name filter for fast local iteration, where a trailing `*`
+    // matches a name prefix (`stream_*`)
     val sfDir = args(0); val outDir = args(1)
-    val only = args.drop(2).toSet
+    val only = args.drop(2).toSeq
+    def wanted(name: String): Boolean = only.isEmpty || only.exists(p =>
+      if (p.endsWith("*")) name.startsWith(p.dropRight(1)) else p == name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -28,7 +31,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => wanted(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

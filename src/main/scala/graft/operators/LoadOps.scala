@@ -28,6 +28,9 @@ object LoadOps {
   val HoltBetaPpm = 100000L
   val HoltHCents = 500L
   val HoltWarmup = 8
+  val BenfordFlagBar = 50000L
+  val HeavyHittersK = 150
+  val DriftBar = 0.8
 
   /** D1: truncate-and-load (load_sde.py:92 load_to_sde: TruncateTable +
     * Append) → Spark overwrite-mode write. Run the cycle twice to prove
@@ -3104,7 +3107,7 @@ object LoadOps {
     *
     * Scale shape: one hash agg to |source·9| rows; everything after is
     * arithmetic over that rollup. */
-  def benford(spark: SparkSession, dir: String, flagBar: Long = 50000L): DataFrame = {
+  def benford(spark: SparkSession, dir: String, flagBar: Long = BenfordFlagBar): DataFrame = {
     val t = Tables(spark, dir)
     benfordOf(
       t.events.select(col("event_type").as("source"),

@@ -390,7 +390,7 @@ object Relational {
     * The per-partition counter table is the declared `mapPartitions`
     * exception: genuinely imperative per-partition state (bounded at k
     * entries) that no relational operator expresses. */
-  def qHeavyHitters(spark: SparkSession, dir: String, k: Int = 150): DataFrame = {
+  def qHeavyHitters(spark: SparkSession, dir: String, k: Int = LoadOps.HeavyHittersK): DataFrame = {
     import spark.implicits._
     val t = Tables(spark, dir)
     val keys = t.events.select(col("user_id").cast("long")).as[Long]

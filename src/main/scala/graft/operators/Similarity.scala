@@ -587,7 +587,7 @@ object Similarity {
     * Scale shape: one explode → one (label, pos) hash agg (map-side
     * partial over ≤ |labels|·dims cells) → one |labels|-row join. The
     * report is dimension-bounded regardless of corpus size. */
-  def embeddingDrift(spark: SparkSession, dir: String, bar: Double = 0.8): DataFrame =
+  def embeddingDrift(spark: SparkSession, dir: String, bar: Double = LoadOps.DriftBar): DataFrame =
     embeddingDriftOf(vectors(spark, dir), bar)
 
   /** The D36 compute over any (vec_id, label, v) frame — specs plant

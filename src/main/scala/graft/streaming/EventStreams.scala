@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Input/output rows for the stateful sessionizer (G3). */
 final case class SessionEvent(user_id: Long, sec: Long, value: Double)
@@ -163,38 +166,32 @@ object EventStreams {
     }
   }
 
-  /** Shared CELL-FOLD state store for the cumulative foreachBatch gates
-    * (r13-verdict stretch, r14): every "accumulate additive partials,
-    * re-emit the report" gate routes its state turn through this one
-    * helper — read the prior generation, union the batch's partials,
-    * re-aggregate per key (every non-key column summed back to its own
-    * dtype — partials are additive by each gate's construction), publish
-    * crash-safe, return the total for the report assembly. One shared
-    * shape means no future gate can hand-roll a state fold that grows
-    * beyond its key grain or skips the atomic-rename publish: the fold's
-    * state size IS the key domain's size, which each gate's scaladoc
-    * argues is value-bounded. (The UNBOUNDED ledgers — G15/G17 corpus
-    * hash sets — use [[appendLedger]] instead: their state is
-    * corpus-sized, so the full-rewrite this helper performs per trigger
-    * would be the r12 quadratic-ingest bug. This helper is for
-    * value-bounded cell/moment grains only.) */
-  /** (r18) Process-local fold cache: the prior generation a trigger
-    * needs is exactly the `total` the PREVIOUS trigger checkpointed and
-    * published — re-decoding it from the just-written parquet was one
-    * read job per trigger for every fold gate. The cache hands the
-    * block-manager copy back instead, VALIDATED against the on-disk
-    * generation (file name/length/mtime stamp of the published dir) and
-    * against the owning session, so any out-of-band change — a fresh
-    * gate run deleting the root, a crash-recovery generation, another
-    * process's publish, a new session in one JVM — falls back to the
-    * parquet read. Crash-safety is untouched: every trigger still
-    * publishes via the atomic-rename protocol, and recovery always
-    * reads the disk (the cache is a hot-path shortcut, never the record
-    * of truth). This is the same measurement that refuted the r17
-    * "drop the per-trigger checkpoint" experiment, applied in the
-    * winning direction: block-manager cells beat parquet re-decodes. */
-  private val foldCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
+  /** Most fold generations [[foldCache]] holds; the least recently used
+    * goes first. Every fold gate of one Verify run fits. */
+  private val FoldCacheSize = 32
+
+  /** Process-local fold cache: state dir → (stamp of the published
+    * generation, the checkpointed total that was published). A trigger
+    * takes its prior generation from here instead of re-reading the
+    * parquet the previous trigger wrote, one read job less per trigger.
+    * A hit must match the on-disk stamp and the calling session, so any
+    * out-of-band change (a deleted root, a crash-recovery generation,
+    * another writer, another session) falls back to the disk, which
+    * stays the record of truth. */
+  private val foldCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, (String, DataFrame)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (String, DataFrame)]): Boolean =
+        size() > FoldCacheSize
+    })
+
+  /** Drops the cached generations of `root` and every state dir under it. */
+  private[graft] def evictFolds(root: String): Unit =
+    foldCache.keySet.removeIf(k => k == root || k.startsWith(root + "/"))
+
+  /** State dirs with a cached generation. */
+  private[graft] def cachedFolds: Seq[String] =
+    foldCache.synchronized(foldCache.keySet.asScala.toSeq)
 
   /** Sorted file-level stamp of a published state dir ("" = unreadable
     * or absent, which never validates a cache hit). */
@@ -206,19 +203,24 @@ object EventStreams {
     else fs.listStatus(p)
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
-  } catch { case _: Throwable => "" }
+  } catch { case NonFatal(_) => "" }
 
+  /** One turn of a cell-fold state store: the prior generation ∪ the
+    * batch's partials, re-aggregated per key (every non-key column summed
+    * back to its own dtype, so partials must be additive), published
+    * crash-safe and returned for the report. State is the key domain, so
+    * this is for value-bounded cell grains only; corpus-sized sets use
+    * [[appendLedger]], where a per-trigger rewrite would be quadratic. */
   private[graft] def foldState(part: DataFrame, stateDir: String,
       keys: Seq[String]): DataFrame = {
     val spark = part.sparkSession
     val vals = part.schema.filterNot(f => keys.contains(f.name))
-    val prior = {
-      val c = foldCache.get(stateDir)
-      val st = stateStamp(spark, stateDir)
-      if (c != null && st.nonEmpty && c._1 == st && (c._2.sparkSession eq spark))
-        c._2
-      else readState(spark, stateDir).getOrElse(part.limit(0))
-    }
+    // a lookup takes the entry out, so a stale one never outlives it
+    val prior = Option(foldCache.remove(stateDir))
+      .filter { case (stamp, df) => (df.sparkSession eq spark) && stamp.nonEmpty &&
+        stamp == stateStamp(spark, stateDir) }
+      .map(_._2)
+      .getOrElse(readState(spark, stateDir).getOrElse(part.limit(0)))
     val aggs = vals.map(f => sum(col(f.name)).cast(f.dataType).as(f.name))
     val total = prior.unionByName(part)
       .groupBy(keys.map(col): _*)
@@ -353,119 +355,6 @@ object EventStreams {
           out.iterator
       }
   }
-
-  /** G10 (gated form): D19's decay-weighted smoothing as an always-on
-    * monitor — each micro-batch of raw (event_type, sec, value) telemetry
-    * collapses to per-(source, day) PARTIAL duration sums (batch-local
-    * hash agg — state stays run-log-sized, the G15 ledger argument, never
-    * event-proportional), the partials fold into a persisted ledger (the
-    * G14 write-new-then-rename rule), and every trigger re-emits the full
-    * trajectory by summing the partials per (source, day) and running the
-    * SAME [[graft.operators.LoadOps.decayAvgOver]] core the batch op
-    * uses — the G16 cumulative-report pattern, so after the last trigger
-    * the report equals the one-shot D19 pass over the corpus (partial-sum
-    * fold order is the only difference, the same reorder Spark's own
-    * parallel agg performs; the rounded outputs are identical — gated).
-    * The flatMapGroupsWithState recurrence above stays as the O(1)
-    * unbounded-history capability; this is the bounded-window D19
-    * semantics run continuously. */
-  def decayLedgerStream(events: DataFrame, stateDir: String,
-      windowDays: Int = 7): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val part = batch0.toDF()
-          .withColumn("day", expr("sec div 86400").cast("long"))
-          .groupBy(col("event_type").as("source"), col("day"))
-          .agg(sum(col("value")).as("duration"))
-        val ledger = foldState(part, stateDir + "/dailies", Seq("source", "day"))
-        graft.operators.LoadOps.decayAvgOver(ledger, windowDays)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G26: D47's hour-of-day chi-square drift as an always-on monitor —
-    * each micro-batch of (event_type, sec) telemetry collapses directly
-    * to per-(source, hour-of-day) ERA count partials (batch-local hash
-    * agg), the partials fold into the persisted cell ledger (G14
-    * write-new-then-rename), and every trigger re-runs the SAME
-    * [[graft.operators.LoadOps.chi2FromHourCells]] assembly the batch
-    * op is built on.
-    *
-    * The reference era is FROZEN configuration: `baseline` is a
-    * driver-sized (event_type, ref_end_sec) table — rows at or before a
-    * source's ref_end_sec are its reference profile, everything after
-    * is current. That is the always-on deployment shape (the batch op
-    * re-derives its midpoint because it sees a finite corpus; a monitor
-    * pins its baseline era, the G22/G21 training-horizon convention) and
-    * it is what makes the state TRULY bounded: era assignment is pure
-    * per-row arithmetic, so the ledger holds ≤ |sources|×24 cells —
-    * sources×24×eras counts — FOREVER, independent of the stream's time
-    * horizon (the r13 per-(source, sec) grain grew ~86k rows/day/source
-    * and each trigger rewrote all of it; spec-pinned bounded now).
-    * Counts are exact additive integers, so after the last trigger the
-    * report equals the one-shot D47 pass with the same per-source
-    * split bit-for-bit (gated — the gate derives `baseline` from the
-    * corpus midpoints, making the shared-oracle equality exact).
-    * Telemetry from sources absent from `baseline` is dropped — an
-    * unconfigured source has no reference era to test against. */
-  def chi2LedgerStream(events: DataFrame, stateDir: String,
-      baseline: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val part = batch0.toDF()
-          .join(broadcast(baseline), Seq("event_type"))
-          .groupBy(col("event_type"),
-            expr("(sec div 3600) % 24").cast("long").as("hour"))
-          .agg(sum(when(col("sec") <= col("ref_end_sec"), 1L).otherwise(0L))
-              .cast("long").as("o_r"),
-            sum(when(col("sec") > col("ref_end_sec"), 1L).otherwise(0L))
-              .cast("long").as("o_c"))
-        val ledger = foldState(part, stateDir + "/cells", Seq("event_type", "hour"))
-        graft.operators.LoadOps.chi2FromHourCells(ledger)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G27: D48's change-point locator as an always-on monitor — each
-    * micro-batch of (event_type, sec, value) telemetry collapses to
-    * per-(source, day) (count, Σcents) PARTIALS (exact integers, so the
-    * fold is associative with zero drift), the partials merge into the
-    * persisted ledger (G14 write-new-then-rename), and every trigger
-    * re-derives the D40 daily md frame (Σcents div count — computed
-    * from the MERGED sums, identical to the batch pass) and re-runs the
-    * SAME [[graft.operators.LoadOps.changepointOver]] core. After the
-    * last trigger the report equals the one-shot D48 pass bit-for-bit
-    * (gated); mid-stream it is the change-point of the prefix — the
-    * continuously-updated "when did this source move" answer a triage
-    * dashboard reads. */
-  def changepointLedgerStream(events: DataFrame, stateDir: String,
-      bar: Double = graft.operators.LoadOps.ChangepointBar)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val part = batch0.toDF()
-          .select(col("event_type").as("source"),
-            expr("sec div 86400").cast("long").as("day"),
-            expr("cast(round(value * 100) as long)").as("cents"))
-          .groupBy(col("source"), col("day"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum(col("cents")).cast("long").as("s"))
-        val ledger = foldState(part, stateDir + "/dailies", Seq("source", "day"))
-        graft.operators.LoadOps.changepointOver(
-          ledger.select(col("source"), col("day"),
-            expr("s div n").as("md")), bar)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
 
   /** G9: streaming absence detection — the capability NO batch pass has:
     * an alert that fires with ZERO new data from the silent source. The
@@ -698,334 +587,6 @@ object EventStreams {
       }
       .start()
 
-  /** G30: STREAMING Cramér's V — E56 as a continuous association
-    * monitor: the (a, b) contingency cells accumulate in persisted
-    * state (associative integer counts — any batch slicing folds to
-    * the same table), and every trigger re-emits the effect size
-    * through the SAME `Relational.cramersFromCells` assembly, so the
-    * report equals the batch pass over the prefix bit-for-bit after
-    * every trigger. A drifting V is a schema-semantics alarm: two
-    * columns that used to determine each other (V≈1) decoupling means
-    * an upstream join or mapping broke. State is O(r×c) forever. */
-  def cramersStream(rows: DataFrame, stateDir: String,
-      nameA: String, nameB: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF().select(col("a"), col("b"))
-          .groupBy(col("a"), col("b"))
-          .agg(count(lit(1)).cast("long").as("o"))
-        val cells = foldState(fresh, stateDir + "/cells", Seq("a", "b"))
-        graft.operators.Relational.cramersFromCells(cells, nameA, nameB)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G31: STREAMING winsorized/trimmed means — E58 as a continuous
-    * robust-location monitor: the (flag, v) value cells accumulate in
-    * persisted state (associative integer counts), and every trigger
-    * re-runs the SAME `Relational.winsorizedFromCells` assembly —
-    * type-1 boundary picks and exact integer means over the
-    * accumulated cells — so the report equals the batch pass over the
-    * prefix bit-for-bit after every trigger. State is value-bounded
-    * (distinct cents per flag), never row-proportional. */
-  def winsorizedStream(rows: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF().select(col("flag"), col("v").cast("long"))
-          .groupBy(col("flag"), col("v"))
-          .agg(count(lit(1)).cast("long").as("cnt"))
-        val cells = foldState(fresh, stateDir + "/cells", Seq("flag", "v"))
-        graft.operators.Relational.winsorizedFromCells(cells)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G21: STREAMING CUSUM — D40 as the always-on changepoint monitor:
-    * each micro-batch of (source, day, md) dailies folds into a
-    * persisted run-log state (the G14 write-new-then-rename rule;
-    * state is RUN-LOG-sized — the batch op's own input scale, the G15
-    * ledger argument), and every trigger re-emits the full trajectory
-    * report by running the SAME `LoadOps.cusumOver` over the
-    * accumulated state — the G16 cumulative-report pattern, so the
-    * report equals the batch pass over the prefix after EVERY trigger
-    * bit-for-bit (integer cents end to end, no float drift class). The
-    * training-baseline rule needs no special streaming handling: the
-    * shared core re-derives it from the accumulated history's first
-    * days each trigger, exactly as the batch op would. */
-  def cusumStream(daily: DataFrame, stateDir: String,
-      kCents: Long = graft.operators.LoadOps.CusumKCents,
-      hCents: Long = graft.operators.LoadOps.CusumHCents)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    daily.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val batch = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("md").cast("long"))
-        val total = foldState(batch, stateDir + "/dailies", Seq("source", "day"))
-        graft.operators.LoadOps.cusumOver(total, kCents, hCents)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G33: STREAMING Page–Hinkley — D58 as the always-on adaptive-mean
-    * drift pager: per-(source, day) dailies fold into the shared
-    * [[foldState]] store (run-log-sized, the G21 argument — each daily
-    * row arrives once, the declared in-order contract), and every
-    * trigger re-runs the SAME `LoadOps.pageHinkleyOver` pass over the
-    * accumulated dailies, so the emitted trajectory equals the batch
-    * operator over the prefix bit-for-bit after every trigger (exact
-    * integer micro-cents end to end — no float drift class). Unlike the
-    * G21 CUSUM twin, the baseline here is the RUNNING mean, so the
-    * monitor self-calibrates as history accumulates — no training
-    * horizon to configure. */
-  def pageHinkleyStream(daily: DataFrame, stateDir: String,
-      deltaCents: Long = graft.operators.LoadOps.PhDeltaCents,
-      lambdaCents: Long = graft.operators.LoadOps.PhLambdaCents)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    daily.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("md").cast("long"))
-        val total = foldState(batch, stateDir + "/dailies", Seq("source", "day"))
-        graft.operators.LoadOps.pageHinkleyOver(total, deltaCents, lambdaCents)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G34: STREAMING PSI — D61 as an always-on score-stability pager:
-    * per-(source, day, cents) support cells fold through the shared
-    * [[foldState]] store (value-support × horizon bounded — the cent
-    * domain and the calendar cap the state, corpus volume only grows
-    * the counts), and every trigger re-runs the SAME
-    * [[graft.operators.LoadOps.psiCells]] assembly over the folded
-    * total — window split and bin bounds recompute over everything
-    * seen so far, so the report equals D61's batch pass over the
-    * prefix bit-for-bit after EVERY trigger (integer cells in, one
-    * order-pinned float fold out — no drift to accumulate). */
-  def psiStream(cells: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    cells.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("source"), col("day").cast("long").as("day"),
-            col("cents").cast("long").as("cents"))
-          .agg(count(lit(1)).cast("long").as("cnt"))
-        val total = foldState(batch, stateDir + "/cells",
-          Seq("source", "day", "cents"))
-        graft.operators.LoadOps.psiCells(total)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G35: STREAMING AUC — E63 as an always-on online classifier-eval:
-    * per-(source, cents) cells carrying (positives, total) fold through
-    * [[foldState]] (value-support-bounded state — the cent domain caps
-    * the rows, volume only grows the counts), and every trigger re-ranks
-    * the folded cells through the SAME [[graft.operators.Relational
-    * .aucCells]] midrank assembly. Integer cells in, one fixed-shape
-    * division out — the report equals E63's batch pass over the prefix
-    * bit-for-bit after EVERY trigger. */
-  def aucStream(labeled: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    labeled.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("source"), col("cents").cast("long").as("cents"))
-          .agg(sum(col("pos")).cast("long").as("np"),
-            count(lit(1)).cast("long").as("cnt"))
-        val total = foldState(batch, stateDir + "/cells",
-          Seq("source", "cents"))
-        graft.operators.Relational.aucCells(total)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G36: STREAMING MANN–KENDALL — D60 as an always-on monotone-trend
-    * pager: per-(source, day) exact integer (Σcents, n) moments fold
-    * through [[foldState]] (run-log-sized state), each trigger recovers
-    * the daily means by the SAME floor division the batch fold uses and
-    * re-runs [[graft.operators.LoadOps.mannKendallOf]] — S, var18 and
-    * the significance inequality are all exact integers, so the report
-    * equals D60's batch pass over the prefix bit-for-bit after EVERY
-    * trigger. */
-  def mannKendallStream(cents: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    cents.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("source"), col("day").cast("long").as("day"))
-          .agg(sum(col("cents")).cast("long").as("sum_cents"),
-            count(lit(1)).cast("long").as("n"))
-        val total = foldState(batch, stateDir + "/dailies",
-          Seq("source", "day"))
-        graft.operators.LoadOps.mannKendallOf(
-            total.select(col("source"), col("day"),
-              expr("sum_cents div n").as("md")))
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G38: STREAMING FORECAST BACKTEST — D64 as the forecaster's
-    * always-on report card: the same per-(source, day) exact (Σcents, n)
-    * moments the G24 Holt stream folds, with each trigger re-running
-    * holtOver AND the D64 error rollup over the full prefix — the
-    * forecaster and its scorecard can never drift apart, and a
-    * skill regression (MASE crossing 1) pages the trigger it happens.
-    * All-integer end to end, so the report equals D64's batch pass over
-    * the prefix bit-for-bit after EVERY trigger. */
-  def forecastEvalStream(cents: DataFrame, stateDir: String,
-      alphaPpm: Long = graft.operators.LoadOps.HoltAlphaPpm,
-      betaPpm: Long = graft.operators.LoadOps.HoltBetaPpm,
-      hCents: Long = graft.operators.LoadOps.HoltHCents,
-      warmup: Int = graft.operators.LoadOps.HoltWarmup)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    cents.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("cents").cast("long"))
-          .groupBy(col("source"), col("day"))
-          .agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
-        val total = foldState(batch, stateDir + "/moments", Seq("source", "day"))
-        graft.operators.LoadOps.forecastEvalOver(
-            graft.operators.LoadOps.holtOver(
-              total.select(col("source"), col("day"), expr("s div n").as("md")),
-              alphaPpm, betaPpm, hCents, warmup))
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G39: STREAMING CALIBRATION — D59 as the live reliability diagram:
-    * the SAME (source, cents) → (positives, total) cells the G35 AUC
-    * stream folds (discrimination and calibration are the two readings
-    * of one state), re-assembled per trigger through
-    * [[graft.operators.LoadOps.calibrationCells]] — all-integer midrank
-    * micros, so the diagram equals D59's batch pass over the prefix
-    * bit-for-bit after EVERY trigger. */
-  def calibrationStream(labeled: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    labeled.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("source"), col("cents").cast("long").as("cents"))
-          .agg(sum(col("pos")).cast("long").as("np"),
-            count(lit(1)).cast("long").as("cnt"))
-        val total = foldState(batch, stateDir + "/cells",
-          Seq("source", "cents"))
-        graft.operators.LoadOps.calibrationCells(total)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G37: STREAMING SRM — E64 as the always-on assignment-health pager
-    * (an SRM that appears mid-experiment means the split BROKE mid-
-    * experiment — exactly when a batch check wouldn't be looking):
-    * distinct (group, user) units accumulate as [[foldState]] KEYS
-    * (the value is a seen-count the report ignores) — unit-set union is
-    * the one fold distinctness allows, so state is unit-set-sized, the
-    * same class as the G17 novelty ledger; every trigger re-counts arms
-    * through the SAME [[graft.operators.Relational.srmUnits]] all-integer
-    * assembly, equal to E64's batch pass over the prefix after EVERY
-    * trigger. */
-  def srmStream(events: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("event_type"), col("user_id").cast("long").as("user_id"))
-          .agg(count(lit(1)).cast("long").as("cnt"))
-        val total = foldState(batch, stateDir + "/units",
-          Seq("event_type", "user_id"))
-        graft.operators.Relational.srmUnits(
-            total.select(col("event_type"), col("user_id")))
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G20: STREAMING A/B test — E36 as sequential monitoring (the
-    * always-on experiment dashboard): per-(event_type) arm sufficient
-    * statistics accumulate as EXACT INTEGER cent-moments (n, Σcents,
-    * Σcents²) in a persisted O(|groups|) state table (the G14
-    * write-new-then-rename rule), and each trigger re-emits the verdict
-    * via the SAME `Relational.abTtestFromCents` assembly the batch
-    * recompute uses. Integer moments make accumulation associative with
-    * zero float drift, so the report equals the one-shot pass over all
-    * rows seen so far BIT-FOR-BIT after every trigger (spec-pinned) —
-    * no rounding-boundary flake class at all. */
-  def abTtestStream(events: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = graft.operators.Relational.abCentMomentsOf(batch0.toDF())
-        val total = foldState(fresh, stateDir + "/moments", Seq("event_type"))
-        graft.operators.Relational.abTtestFromCents(total)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G18: STREAMING embedding drift — D36 as continuous monitoring: the
-    * per-(label, dim, split) running (sum, count) moments accumulate in
-    * a persisted state table (write-new-then-rename, the G14 rule), and
-    * each batch re-emits the drift report from the TOTAL state — means
-    * are exactly recoverable from moments, so the report equals the
-    * batch pass over all rows seen so far (spec-pinned; the rounded
-    * 4-dec cosine absorbs summation-order noise). State is
-    * O(|labels|·dims·2) regardless of stream length; the report
-    * assembly is the SAME `Similarity.driftReport` the batch op uses. */
-  def embeddingDriftStream(vecs: DataFrame, stateDir: String, bar: Double = 0.8)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch.sparkSession
-        val partial = batch.toDF()
-          .withColumn("is_cur", col("vec_id") % 5 === 0)
-          .select(col("label"), col("is_cur"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy(col("label"), col("pos"), col("is_cur"))
-          .agg(sum(col("x")).as("s"), count(lit(1)).as("c"))
-        val merged = foldState(partial, stateDir + "/moments",
-          Seq("label", "pos", "is_cur"))
-        val byDim = merged.groupBy(col("label"), col("pos"))
-          .agg((sum(when(!col("is_cur"), col("s"))) /
-              sum(when(!col("is_cur"), col("c")))).as("rc"),
-            (sum(when(col("is_cur"), col("s"))) /
-              sum(when(col("is_cur"), col("c")))).as("cc"))
-        val counts = merged.filter(col("pos") === 0)
-          .groupBy(col("label"))
-          .agg(sum(when(!col("is_cur"), col("c")).otherwise(0L)).cast("long").as("n_ref"),
-            sum(when(col("is_cur"), col("c")).otherwise(0L)).cast("long").as("n_cur"))
-        graft.operators.Similarity.driftReport(byDim, counts, bar)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
   /** G17: STREAMING novelty scoring — F60 as corpus INGEST (the G15
     * ledger pattern on gram hashes instead of chunk hashes): documents
     * arrive in micro-batches, a persisted gram-owner ledger carries the
@@ -1074,148 +635,192 @@ object EventStreams {
       .start()
   }
 
-  /** G25: STREAMING exact heavy hitters — E29 as the always-on hot-key
-    * dashboard: per-key counts accumulate in persisted state (the one
-    * truly associative statistic — integer adds), and every trigger
-    * re-emits the verdict through the SAME
-    * `Relational.heavyHittersFromCounts` filter over the accumulated
-    * counts and total, so the report equals the batch op over the
-    * prefix after every trigger. State is O(|distinct keys|) — the
-    * exact-count tradeoff; the bounded-memory alternative is the CMS
-    * stream (G5), this form is the exact one. */
-  def heavyHittersStream(events: DataFrame, stateDir: String, k: Int = 150)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF()
-          .select(col("user_id").cast("long").as("user_id"))
-          .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-        val total = foldState(fresh, stateDir + "/counts", Seq("user_id"))
-        // coalesce: an empty first micro-batch has no rows to sum — the
-        // grand total must be 0, not a null that kills the stream
-        val n = total.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
-        graft.operators.Relational.heavyHittersFromCounts(total, n, k)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G24: STREAMING Holt forecast — D43 as the always-on trend pager:
-    * (source, day, Σcents, n) moments accumulate in persisted state
-    * (associative integers — a day split across micro-batches folds to
-    * the same daily metric), and every trigger re-runs the SAME
-    * `LoadOps.holtOver` fold over the accumulated dailies, so the
-    * emitted trajectory equals the batch pass over the prefix
-    * bit-for-bit. The order-dependent recurrence needs no incremental
-    * state beyond the dailies themselves — the fold is run-log-sized,
-    * the G21 argument. */
-  def holtStream(events: DataFrame, stateDir: String,
-      alphaPpm: Long = graft.operators.LoadOps.HoltAlphaPpm,
-      betaPpm: Long = graft.operators.LoadOps.HoltBetaPpm,
-      hCents: Long = graft.operators.LoadOps.HoltHCents,
-      warmup: Int = graft.operators.LoadOps.HoltWarmup)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("cents").cast("long"))
-          .groupBy(col("source"), col("day"))
-          .agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
-        val total = foldState(fresh, stateDir + "/moments", Seq("source", "day"))
-        graft.operators.LoadOps.holtOver(
-            total.select(col("source"), col("day"), expr("s div n").as("md")),
-            alphaPpm, betaPpm, hCents, warmup)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G22: STREAMING seasonal monitor — D41 as the always-on weekday
-    * pager: per-(source, day) integer (Σcents, n) moments accumulate in
-    * a persisted state table (the G14 write-new-then-rename rule; state
-    * is |source·days|-sized — the batch op's own rollup scale), the
-    * daily metric `Σ div n` is re-derived from TOTAL moments each
-    * trigger (associative integers — a day split across micro-batches
-    * folds to the same md as the one-shot pass), and the report runs
-    * the SAME `LoadOps.seasonalOf` core, so it equals the batch pass
-    * over the prefix after EVERY trigger bit-for-bit. The training
-    * horizon needs no streaming special case: the shared core re-derives
-    * it from the accumulated history's min day each time. */
-  def seasonalStream(events: DataFrame, stateDir: String,
-      trainDays: Long = graft.operators.LoadOps.SeasonalTrainDays,
-      hCents: Long = graft.operators.LoadOps.SeasonalHCents)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("cents").cast("long"))
-          .groupBy(col("source"), col("day"))
-          .agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
-        val total = foldState(fresh, stateDir + "/moments", Seq("source", "day"))
-        graft.operators.LoadOps.seasonalOf(
-            total.select(col("source"), col("day"), expr("s div n").as("md")),
-            trainDays, hCents)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G28: STREAMING Hampel filter — D55 as the always-on robust outlier
-    * pager: per-(source, day) cent sums and counts accumulate in a
-    * persisted state table (associative integers — a day split across
-    * micro-batches folds to the same daily metric no matter where the
-    * batch boundaries land), and every trigger re-runs the SAME
-    * `LoadOps.hampelOver` pass over the accumulated dailies, so the
-    * emitted alarm set equals the batch operator over the prefix
-    * bit-for-bit after every trigger. State is run-log-sized — the G21
-    * argument: the trailing-window recompute is cells×window bounded,
-    * never event-proportional. */
-  def hampelStream(events: DataFrame, stateDir: String,
-      winDays: Int = graft.operators.LoadOps.HampelWindow,
-      minWin: Int = graft.operators.LoadOps.HampelMinWin)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("cents").cast("long"))
-          .groupBy(col("source"), col("day"))
-          .agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
-        val total = foldState(fresh, stateDir + "/moments", Seq("source", "day"))
-        graft.operators.LoadOps.hampelOver(
-            total.select(col("source"), col("day"), expr("s div n").as("md")),
-            winDays, minWin)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
-
-  /** G23: STREAMING Benford screen — D42 as continuous forensics: the
-    * per-(source, digit) occurrence counts accumulate in a persisted
-    * state table (integer counts — associative, zero drift), and each
-    * trigger re-emits the verdict through the SAME
-    * `LoadOps.benfordFromCounts` assembly the batch op uses, so the
-    * flag equals the one-shot pass over all rows seen so far after
-    * every trigger bit-for-bit. State is O(|sources|·9) regardless of
-    * stream length. */
-  def benfordStream(rows: DataFrame, stateDir: String, flagBar: Long = 50000L)
+  /** Runs a [[CellFold]] over a stream: each micro-batch's partial cells
+    * fold into `stateDir/cells` through [[foldState]], and the report
+    * rebuilt from the folded total overwrites `stateDir/report`. After
+    * every trigger the report equals the batch operator over the rows
+    * seen so far. */
+  def foldStream(rows: DataFrame, stateDir: String, fold: CellFold)
       : org.apache.spark.sql.streaming.StreamingQuery =
     rows.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = graft.operators.LoadOps.benfordCountsOf(batch0.toDF())
-        val total = foldState(fresh, stateDir + "/counts", Seq("source", "digit"))
-        graft.operators.LoadOps.benfordFromCounts(total, flagBar)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        val total = foldState(fold.partial(batch.toDF()), stateDir + "/cells", fold.keys)
+        fold.report(total).write.mode("overwrite").parquet(stateDir + "/report")
       }
       .start()
+}
+
+/** A cell-fold monitor: `partial` collapses one micro-batch to additive
+  * cells keyed by `keys`, and `report` rebuilds the monitor's output from
+  * the folded total through the batch operator's own assembly. Run it
+  * with [[EventStreams.foldStream]]. */
+final case class CellFold(keys: Seq[String], partial: DataFrame => DataFrame,
+    report: DataFrame => DataFrame)
+
+/** The cell-fold monitors. Each state is bounded by a value domain, never
+  * by row count: the note on each says which. Integer cells make every
+  * fold exact, so any batch split gives the batch answer. */
+object CellFold {
+  import graft.operators.{LoadOps, Relational, Similarity}
+
+  /** Daily (Σcents, n) moments over (source, day, cents) rows; the report
+    * sees the daily metric `md` by the batch fold's floor division. State:
+    * one row per (source, day), the run log's own size. */
+  private def dailyMoments(report: DataFrame => DataFrame): CellFold =
+    CellFold(Seq("source", "day"),
+      _.select(col("source"), col("day").cast("long"), col("cents").cast("long"))
+        .groupBy(col("source"), col("day"))
+        .agg(sum(col("cents")).as("s"), count(lit(1)).as("n")),
+      t => report(t.select(col("source"), col("day"), expr("s div n").as("md"))))
+
+  /** Ready daily metrics over (source, day, md) rows, each (source, day)
+    * arriving once. State: the run log. */
+  private def dailyMd(report: DataFrame => DataFrame): CellFold =
+    CellFold(Seq("source", "day"),
+      _.select(col("source"), col("day").cast("long"), col("md").cast("long")),
+      report)
+
+  /** (positives, total) per (source, cents) over (source, cents, pos)
+    * rows. State: the cent support. */
+  private def labeled(report: DataFrame => DataFrame): CellFold =
+    CellFold(Seq("source", "cents"),
+      _.groupBy(col("source"), col("cents").cast("long").as("cents"))
+        .agg(sum(col("pos")).cast("long").as("np"), count(lit(1)).cast("long").as("cnt")),
+      report)
+
+  /** D19 decay average over (event_type, sec, value) telemetry. State:
+    * per-(source, day) duration sums. */
+  val decay: CellFold = CellFold(Seq("source", "day"),
+    _.withColumn("day", expr("sec div 86400").cast("long"))
+      .groupBy(col("event_type").as("source"), col("day"))
+      .agg(sum(col("value")).as("duration")),
+    LoadOps.decayAvgOver(_))
+
+  /** D47 hour-of-day chi-square over (event_type, sec) telemetry against
+    * a frozen per-source reference era (`baseline`: event_type,
+    * ref_end_sec). The frozen era makes the state ≤ sources × 24 cells at
+    * any horizon; sources absent from `baseline` are dropped. */
+  def chi2(baseline: DataFrame): CellFold = CellFold(Seq("event_type", "hour"),
+    _.join(broadcast(baseline), Seq("event_type"))
+      .groupBy(col("event_type"), expr("(sec div 3600) % 24").cast("long").as("hour"))
+      .agg(sum(when(col("sec") <= col("ref_end_sec"), 1L).otherwise(0L)).cast("long").as("o_r"),
+        sum(when(col("sec") > col("ref_end_sec"), 1L).otherwise(0L)).cast("long").as("o_c")),
+    LoadOps.chi2FromHourCells(_))
+
+  /** D48 change-point over (event_type, sec, value) telemetry. State:
+    * per-(source, day) (count, Σcents). */
+  val changepoint: CellFold = CellFold(Seq("source", "day"),
+    _.select(col("event_type").as("source"), expr("sec div 86400").cast("long").as("day"),
+        expr("cast(round(value * 100) as long)").as("cents"))
+      .groupBy(col("source"), col("day"))
+      .agg(count(lit(1)).cast("long").as("n"), sum(col("cents")).cast("long").as("s")),
+    t => LoadOps.changepointOver(
+      t.select(col("source"), col("day"), expr("s div n").as("md")), LoadOps.ChangepointBar))
+
+  /** E56 Cramér's V over (a, b) rows, reported under the column names
+    * `nameA`/`nameB`. State: the r × c contingency table. */
+  def cramers(nameA: String, nameB: String): CellFold = CellFold(Seq("a", "b"),
+    _.select(col("a"), col("b")).groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).cast("long").as("o")),
+    Relational.cramersFromCells(_, nameA, nameB))
+
+  /** E58 winsorized/trimmed means over (flag, v) rows. State: distinct
+    * values per flag. */
+  val winsorized: CellFold = CellFold(Seq("flag", "v"),
+    _.select(col("flag"), col("v").cast("long")).groupBy(col("flag"), col("v"))
+      .agg(count(lit(1)).cast("long").as("cnt")),
+    Relational.winsorizedFromCells(_))
+
+  /** D40 CUSUM; the training baseline re-derives from the folded history. */
+  val cusum: CellFold =
+    dailyMd(LoadOps.cusumOver(_, LoadOps.CusumKCents, LoadOps.CusumHCents))
+
+  /** D58 Page–Hinkley against the running mean. */
+  val pageHinkley: CellFold =
+    dailyMd(LoadOps.pageHinkleyOver(_, LoadOps.PhDeltaCents, LoadOps.PhLambdaCents))
+
+  /** D61 PSI over (source, day, cents) rows. State: the cent support ×
+    * the calendar; volume only grows the counts. */
+  val psi: CellFold = CellFold(Seq("source", "day", "cents"),
+    _.groupBy(col("source"), col("day").cast("long").as("day"),
+        col("cents").cast("long").as("cents"))
+      .agg(count(lit(1)).cast("long").as("cnt")),
+    LoadOps.psiCells(_))
+
+  /** E63 AUC. */
+  val auc: CellFold = labeled(Relational.aucCells(_))
+
+  /** D59 calibration: the AUC state read the other way. */
+  val calibration: CellFold = labeled(LoadOps.calibrationCells(_))
+
+  /** D60 Mann–Kendall. */
+  val mannKendall: CellFold = dailyMoments(LoadOps.mannKendallOf(_))
+
+  /** D43 Holt forecast. */
+  val holt: CellFold = dailyMoments(LoadOps.holtOver(_, LoadOps.HoltAlphaPpm,
+    LoadOps.HoltBetaPpm, LoadOps.HoltHCents, LoadOps.HoltWarmup))
+
+  /** D64 forecast backtest of the Holt trajectory. */
+  val forecastEval: CellFold = dailyMoments(md => LoadOps.forecastEvalOver(
+    LoadOps.holtOver(md, LoadOps.HoltAlphaPpm, LoadOps.HoltBetaPpm,
+      LoadOps.HoltHCents, LoadOps.HoltWarmup)))
+
+  /** D41 seasonal monitor; the training horizon starts at the folded
+    * history's first day. */
+  def seasonal(trainDays: Long): CellFold =
+    dailyMoments(LoadOps.seasonalOf(_, trainDays, LoadOps.SeasonalHCents))
+
+  /** D55 Hampel filter. */
+  val hampel: CellFold =
+    dailyMoments(LoadOps.hampelOver(_, LoadOps.HampelWindow, LoadOps.HampelMinWin))
+
+  /** E64 sample-ratio mismatch over (event_type, user_id) rows. Units are
+    * the keys (the value is a seen-count the report ignores), so state is
+    * the unit set and a re-fed unit adds nothing. */
+  val srm: CellFold = CellFold(Seq("event_type", "user_id"),
+    _.groupBy(col("event_type"), col("user_id").cast("long").as("user_id"))
+      .agg(count(lit(1)).cast("long").as("cnt")),
+    t => Relational.srmUnits(t.select(col("event_type"), col("user_id"))))
+
+  /** E36 A/B t-test from integer cent moments (n, Σcents, Σcents²) per
+    * arm. State: one row per group. */
+  val abtest: CellFold = CellFold(Seq("event_type"),
+    Relational.abCentMomentsOf(_), Relational.abTtestFromCents(_))
+
+  /** D36 embedding drift over (vec_id, label, v) rows. State: (sum,
+    * count) per (label, dim, split); the rounded cosine absorbs the
+    * summation order. */
+  val drift: CellFold = CellFold(Seq("label", "pos", "is_cur"),
+    _.withColumn("is_cur", col("vec_id") % 5 === 0)
+      .select(col("label"), col("is_cur"), posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy(col("label"), col("pos"), col("is_cur"))
+      .agg(sum(col("x")).as("s"), count(lit(1)).as("c")),
+    { merged =>
+      val byDim = merged.groupBy(col("label"), col("pos"))
+        .agg((sum(when(!col("is_cur"), col("s"))) /
+            sum(when(!col("is_cur"), col("c")))).as("rc"),
+          (sum(when(col("is_cur"), col("s"))) /
+            sum(when(col("is_cur"), col("c")))).as("cc"))
+      val counts = merged.filter(col("pos") === 0)
+        .groupBy(col("label"))
+        .agg(sum(when(!col("is_cur"), col("c")).otherwise(0L)).cast("long").as("n_ref"),
+          sum(when(col("is_cur"), col("c")).otherwise(0L)).cast("long").as("n_cur"))
+      Similarity.driftReport(byDim, counts, LoadOps.DriftBar)
+    })
+
+  /** E29 exact heavy hitters over user_id rows. State: one count per
+    * distinct key (the CMS gate is the bounded-memory form). */
+  val heavyHitters: CellFold = CellFold(Seq("user_id"),
+    _.select(col("user_id").cast("long").as("user_id"))
+      .groupBy(col("user_id")).agg(count(lit(1)).as("n")),
+    { total =>
+      // an empty first batch folds to no rows: the total is 0, not null
+      val n = total.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
+      Relational.heavyHittersFromCounts(total, n, LoadOps.HeavyHittersK)
+    })
+
+  /** D42 Benford screen over (source, cents) rows. State: sources × 9
+    * digits. */
+  val benford: CellFold = CellFold(Seq("source", "digit"),
+    LoadOps.benfordCountsOf(_), LoadOps.benfordFromCounts(_, LoadOps.BenfordFlagBar))
 }

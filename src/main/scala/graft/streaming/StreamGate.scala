@@ -2,43 +2,40 @@ package graft.streaming
 
 import graft.Tables
 import graft.io.ForklessLocalFs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.{LoadOps, Relational, Similarity}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import scala.util.control.NonFatal
 
 /** Oracle-gate entry points for the G-family (SURVEY §2 G): each runs a
-  * REAL Structured Streaming query to completion (file source →
-  * `Trigger.AvailableNow` → sink, through the streaming engine's state
-  * machinery), then returns the materialized result as a batch frame the
-  * driver hashes against a DuckDB oracle — promoting the streaming rows
-  * from spec-only to the same hash-exact gate every batch operator sits
-  * behind.
+  * REAL Structured Streaming query to completion (file source → sink,
+  * through the streaming engine's state machinery), then returns the
+  * materialized result as a batch frame that Verify checks against a
+  * DuckDB oracle.
   *
   * Determinism contract per entry: operators whose cross-batch semantics
-  * are ARRIVAL-ORDER-dependent (sessionize G3, paragraph ledger G15,
-  * Markov boundary pairs G19) run as one availableNow micro-batch — the
-  * in-order case their docs declare, where stream ≡ batch provably;
-  * operators whose state folds ASSOCIATIVELY (exact dedup G2, integer
-  * CUSUM dailies G21) run MULTI-batch (`maxFilesPerTrigger=1` over a
-  * multi-file input) because any batch split folds to the same answer.
-  * The multi-batch specs in StreamingSpec stay the slicing-equivalence
-  * proof; these entries are the end-to-end oracle check. */
+  * are ARRIVAL-ORDER-dependent (sessionize, the breaker, the paragraph
+  * and novelty ledgers, Markov and top-paths boundary state) run as one
+  * micro-batch — the in-order case their docs declare, where stream ≡
+  * batch provably; operators whose state folds ASSOCIATIVELY run
+  * MULTI-batch (`maxFilesPerTrigger=1` over a multi-file input) because
+  * any batch split folds to the same answer. The multi-batch specs in
+  * StreamingSpec stay the slicing-equivalence proof; these entries are
+  * the end-to-end oracle check. */
 object StreamGate {
-
-  private def root(spark: SparkSession, name: String): String =
-    Tables.scratch(spark, s"graft_stream/$name")
 
   /** Fresh scratch dir (state/checkpoint/input must not leak between
     * gate runs — a stale checkpoint would mark the input processed and
-    * the sink would stay empty). */
-  private def fresh(spark: SparkSession, name: String): String = {
-    val dir = root(spark, name)
+    * the sink would stay empty); cached fold generations under it go
+    * with it. */
+  private[graft] def fresh(spark: SparkSession, name: String): String = {
+    val dir = Tables.scratch(spark, s"graft_stream/$name")
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
+    EventStreams.evictFolds(dir)
     dir
   }
 
@@ -72,61 +69,184 @@ object StreamGate {
     }
   }
 
-  /** G1 gate: watermarked tumbling-window aggregation run availableNow in
-    * complete mode to a memory sink — the final table equals E13's batch
-    * bucketing (same epoch-aligned 1-hour windows), oracled by the same
-    * SQL. */
-  def streamWindowAgg(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "window_agg")
-    Tables(spark, dir).eventsSec
-      .select(timestamp_seconds(col("sec")).as("ts"), col("event_type"), col("value"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("ts", TimestampType),
-        StructField("event_type", StringType), StructField("value", DoubleType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.windowedCounts(src)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_window_agg")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+  /** Writes `df` to `path` and reads it back as a file stream with `df`'s
+    * own schema, made nullable. `files > 1` splits it into that many files
+    * and feeds one per trigger; 1 keeps its layout and reads it all in
+    * one batch. */
+  private def fileStream(spark: SparkSession, path: String, df: DataFrame,
+      files: Int): DataFrame = {
+    (if (files > 1) df.repartition(files) else df).write.parquet(path)
+    val in = spark.readStream.schema(GraftShims.asNullable(df.schema))
+    (if (files > 1) in.option("maxFilesPerTrigger", "1") else in).parquet(path)
+  }
+
+  /** A gate's fresh root `base` and its staged input as a file stream. */
+  private final case class Staged(spark: SparkSession, name: String, base: String,
+      stream: DataFrame) {
+    def state: String = s"$base/state"
+    def report: DataFrame = spark.read.parquet(s"$state/report")
+
+    /** A second input under the same root (see [[fileStream]]). */
+    def input(sub: String, df: DataFrame, files: Int): DataFrame =
+      fileStream(spark, s"$base/$sub", df, files)
+
+    /** Runs the query `start` begins under [[sizedToInput]] until it has
+      * consumed the staged input: an `AvailableNow` query ends by itself,
+      * any other is drained and stopped. */
+    def drain(availableNow: Boolean = false)(start: => StreamingQuery): Unit =
+      sizedToInput(spark, base) {
+        val q = start
+        if (!availableNow) { q.processAllAvailable(); q.stop() }
+        q.awaitTermination()
+      }
+
+    /** Runs `df` into the memory table `graft_stream_<name>` and returns
+      * it; `availableNow = false` keeps the default trigger. */
+    def toMemory(df: DataFrame, mode: String, availableNow: Boolean = true): DataFrame = {
+      val table = s"graft_stream_$name"
+      val w = df.writeStream.outputMode(mode).format("memory").queryName(table)
+        .option("checkpointLocation", s"$base/ckpt")
+      drain(availableNow)((if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start())
+      spark.table(table)
     }
-    spark.table("graft_stream_window_agg")
+
+    /** Runs `df` into the append-mode parquet sink `base/out` and reads it. */
+    def toParquet(df: DataFrame): DataFrame = {
+      drain()(df.writeStream.outputMode("append").format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt").start())
+      spark.read.parquet(s"$base/out")
+    }
+  }
+
+  /** Makes the fresh root `graft_stream/<name>` and stages `df` under
+    * `in` (see [[fileStream]]). */
+  private def stage(spark: SparkSession, name: String, df: DataFrame,
+      files: Int = 1): Staged = {
+    val base = fresh(spark, name)
+    Staged(spark, name, base, fileStream(spark, s"$base/in", df, files))
+  }
+
+  /** One cell-fold gate: input projection, input file count, fold and
+    * report order. Every fold runs multi-batch: its cells are additive. */
+  private final case class FoldGate(input: Tables => DataFrame, files: Int,
+      fold: Tables => CellFold, order: String*)
+
+  private def fold(input: Tables => DataFrame, f: CellFold, order: String*): FoldGate =
+    FoldGate(input, 4, _ => f, order: _*)
+
+  private def dayCents(t: Tables): DataFrame = t.eventsSec
+    .select(col("event_type").as("source"),
+      expr("sec div 86400").cast("long").as("day"),
+      expr("cast(round(value * 100) as long)").as("cents"))
+
+  /** Scores (cents) labeled positive on weekend days. */
+  private def labeled(t: Tables): DataFrame = t.eventsSec
+    .select(col("event_type").as("source"),
+      expr("cast(round(value * 100) as long)").as("cents"),
+      expr("cast(((sec div 86400) + 4) % 7 in (0, 6) as long)").as("pos"))
+
+  private def telemetry(t: Tables): DataFrame =
+    t.eventsSec.select(col("event_type"), col("sec"), col("value"))
+
+  /** The chi-square gate's frozen baseline: each source's corpus time
+    * midpoint, the split D47's batch pass derives itself. */
+  private def midpoints(t: Tables): DataFrame = t.eventsSec
+    .groupBy(col("event_type"))
+    .agg(expr("min(sec) + (max(sec) - min(sec)) div 2").as("ref_end_sec"))
+    .localCheckpoint(true)
+
+  /** The cell-fold gates; each final report equals its batch operator
+    * and shares that operator's oracle. */
+  private val foldGates: Seq[(String, FoldGate)] = Seq(
+    "decay"         -> fold(telemetry, CellFold.decay, "source", "day"),
+    "chi2"          -> FoldGate(_.eventsSec.select(col("event_type"), col("sec")), 4,
+                         t => CellFold.chi2(midpoints(t)), "event_type"),
+    "changepoint"   -> fold(telemetry, CellFold.changepoint, "source"),
+    "cramers"       -> fold(_.lineitem.select(col("l_returnflag").as("a"),
+                         col("l_linestatus").as("b")),
+                         CellFold.cramers("l_returnflag", "l_linestatus")),
+    "winsorized"    -> fold(_.lineitem.select(col("l_returnflag").as("flag"),
+                         expr("cast(round(l_extendedprice * 100) as long)").as("v")),
+                         CellFold.winsorized, "l_returnflag"),
+    "cusum"         -> fold(t => LoadOps.dailyMd(t.spark, t.dir), CellFold.cusum,
+                         "source", "day"),
+    "page_hinkley"  -> fold(t => LoadOps.dailyMd(t.spark, t.dir), CellFold.pageHinkley,
+                         "source", "day"),
+    "psi"           -> fold(dayCents, CellFold.psi, "source"),
+    "auc"           -> fold(labeled, CellFold.auc, "source"),
+    "mann_kendall"  -> fold(dayCents, CellFold.mannKendall, "source"),
+    "forecast_eval" -> fold(dayCents, CellFold.forecastEval, "source"),
+    "calibration"   -> fold(labeled, CellFold.calibration, "source", "bin"),
+    "srm"           -> fold(_.events.select(col("event_type"), col("user_id")),
+                         CellFold.srm, "event_type"),
+    "abtest"        -> fold(_.events.select(col("event_type"), col("user_id"), col("value")),
+                         CellFold.abtest, "event_type"),
+    "drift"         -> FoldGate(t => Similarity.vectors(t.spark, t.dir), 3,
+                         _ => CellFold.drift, "label"),
+    "heavy_hitters" -> fold(_.events.select(col("user_id")), CellFold.heavyHitters,
+                         "user_id"),
+    "holt"          -> fold(dayCents, CellFold.holt, "source", "day"),
+    "seasonal"      -> fold(dayCents, CellFold.seasonal(LoadOps.SeasonalTrainDays),
+                         "source", "day"),
+    "hampel"        -> fold(dayCents, CellFold.hampel, "source", "day"),
+    "benford"       -> fold(_.events.select(col("event_type").as("source"),
+                         expr("cast(round(value * 100) as long)").as("cents")),
+                         CellFold.benford, "source", "digit"))
+
+  private def runFold(name: String, g: FoldGate)(spark: SparkSession, dir: String): DataFrame = {
+    val t = Tables(spark, dir)
+    val s = stage(spark, name, g.input(t), g.files)
+    val f = g.fold(t)
+    s.drain()(EventStreams.foldStream(s.stream, s.state, f))
+    if (g.order.isEmpty) s.report else s.report.orderBy(g.order.map(col): _*)
+  }
+
+  /** Every stream gate by registered name. */
+  val gates: Map[String, (SparkSession, String) => DataFrame] =
+    foldGates.map { case (name, g) => s"stream_$name" -> (runFold(name, g) _) }.toMap ++ Map(
+      "stream_window_agg"      -> streamWindowAgg _,
+      "stream_dedup"           -> streamDedup _,
+      "stream_sessionize"      -> streamSessionize _,
+      "stream_paragraph_dedup" -> streamParagraphDedup _,
+      "stream_markov"          -> streamMarkov _,
+      "stream_top_paths"       -> streamTopPaths _,
+      "stream_constraints"     -> streamConstraints _,
+      "stream_changelog"       -> streamChangelog _,
+      "stream_breaker"         -> streamBreaker _,
+      "stream_novelty"         -> streamNovelty _,
+      "stream_enrich"          -> streamEnrich _,
+      "stream_join"            -> streamJoin _,
+      "stream_staleness"       -> streamStaleness _,
+      "stream_outer_join"      -> streamOuterJoin _,
+      "stream_cms"             -> streamCms _,
+      "stream_hll"             -> streamHll _,
+      "stream_quantile"        -> streamQuantile _,
+      "stream_bloom"           -> streamBloom _)
+
+  /** G1 gate: watermarked tumbling-window aggregation run availableNow in
+    * complete mode — the final table equals E13's batch bucketing (same
+    * epoch-aligned 1-hour windows), oracled by the same SQL. */
+  def streamWindowAgg(spark: SparkSession, dir: String): DataFrame = {
+    val s = stage(spark, "window_agg", Tables(spark, dir).eventsSec
+      .select(timestamp_seconds(col("sec")).as("ts"), col("event_type"), col("value")))
+    s.toMemory(EventStreams.windowedCounts(s.stream), "complete")
       .select(col("bucket_start").cast("long").as("bucket_start"),
         col("event_type"), col("n"), col("sum_value"))
       .orderBy(col("bucket_start"), col("event_type"))
   }
 
   /** G2 gate: streaming exact dedup on (user_id, event_type), MULTI-batch
-    * (4 input files, one per trigger) — per-key state carries across
-    * micro-batches, later duplicates are dropped; the watermark delay
-    * exceeds the corpus span so no state evicts and no row is late
-    * (the exact-dedup configuration; bounded-state eviction is the
-    * StreamingSpec's subject). The emitted key set is then rolled up to
-    * a deterministic per-type report. */
+    * — per-key state carries across micro-batches, later duplicates are
+    * dropped; the watermark delay exceeds the corpus span so no state
+    * evicts and no row is late (the exact-dedup configuration;
+    * bounded-state eviction is the StreamingSpec's subject). The emitted
+    * key set is then rolled up to a deterministic per-type report. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "dedup")
-    Tables(spark, dir).eventsSec
-      .select(timestamp_seconds(col("sec")).as("ts"),
-        col("user_id"), col("event_type"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("ts", TimestampType),
-        StructField("user_id", LongType), StructField("event_type", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.dedupStream(src, Seq("user_id", "event_type"), "3650 days")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_dedup")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
-    spark.table("graft_stream_dedup")
+    val s = stage(spark, "dedup", Tables(spark, dir).eventsSec
+      .select(timestamp_seconds(col("sec")).as("ts"), col("user_id"), col("event_type")), 4)
+    s.toMemory(EventStreams.dedupStream(s.stream, Seq("user_id", "event_type"), "3650 days"),
+        "append")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_users"),
         sum(col("user_id")).cast("long").as("user_checksum"))
@@ -139,287 +259,66 @@ object StreamGate {
     * the oracle is E12's session rollup MINUS each user's final session. */
   def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = fresh(spark, "sessionize")
-    Tables(spark, dir).eventsSec
-      .select(col("user_id"), col("sec"), col("value"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("sec", LongType), StructField("value", DoubleType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.sessionizeStream(src.as[SessionEvent])
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_sessionize")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
-    spark.table("graft_stream_sessionize")
+    val s = stage(spark, "sessionize", Tables(spark, dir).eventsSec
+      .select(col("user_id"), col("sec"), col("value")))
+    s.toMemory(EventStreams.sessionizeStream(s.stream.as[SessionEvent]).toDF(), "append")
       .select(col("user_id"), col("n_events"), col("start_sec"), col("end_sec"),
         round(col("session_value"), 2).as("session_value"))
       .orderBy(col("user_id"), col("start_sec"))
   }
 
-  /** G15 gate: the streaming paragraph-dedup ledger run availableNow over
-    * the wired corpus (one batch — the in-order case where the ledger's
-    * keep-first equals F49's min-occurrence rule exactly); the report
-    * parquet the stream emits IS the gated frame. */
+  /** G15 gate: the streaming paragraph-dedup ledger over the wired corpus
+    * in one batch — the in-order case where the ledger's keep-first
+    * equals F49's min-occurrence rule exactly; the report parquet the
+    * stream emits IS the gated frame. */
   def streamParagraphDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "paragraph")
-    graft.operators.Dedup.paragraphWire(
-        Tables(spark, dir).documents.select(col("doc_id"), col("text")))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.paragraphDedupStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("doc_id"))
+    val s = stage(spark, "paragraph", graft.operators.Dedup.paragraphWire(
+      Tables(spark, dir).documents.select(col("doc_id"), col("text"))))
+    s.drain()(EventStreams.paragraphDedupStream(s.stream, s.state))
+    s.report.orderBy(col("doc_id"))
   }
 
-  /** G19 gate: the streaming Markov state store run availableNow (one
-    * batch — the in-order case where stored-last boundary pairs equal the
-    * batch window pass); the cumulative report equals E35 and shares its
-    * oracle. */
+  /** G19 gate: the streaming Markov state store in one batch — the
+    * in-order case where stored-last boundary pairs equal the batch
+    * window pass; the cumulative report equals E35 and shares its oracle. */
   def streamMarkov(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "markov")
-    Tables(spark, dir).eventsSec
-      .select(col("user_id"), col("sec"), col("event_id"), col("event_type"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("sec", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.markovStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-      .orderBy(col("state"), col("next_state"))
+    val s = stage(spark, "markov", Tables(spark, dir).eventsSec
+      .select(col("user_id"), col("sec"), col("event_id"), col("event_type")))
+    s.drain()(EventStreams.markovStream(s.stream, s.state))
+    s.report.orderBy(col("state"), col("next_state"))
   }
 
-  /** G29 gate: streaming top paths run to completion — the in-order
-    * single availableNow batch (the G19 arrival-order contract; the
-    * multi-batch slicing-equivalence proof lives in StreamingSpec);
-    * the final cumulative report equals E59's batch pass and shares
-    * its oracle verbatim. */
+  /** G29 gate: streaming top paths in one batch (the G19 arrival-order
+    * contract); the final cumulative report equals E59's batch pass and
+    * shares its oracle verbatim. */
   def streamTopPaths(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "top_paths")
-    Tables(spark, dir).eventsSec
-      .select(col("user_id"), col("event_id"), col("sec"), col("event_type"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("event_id", LongType), StructField("sec", LongType),
-        StructField("event_type", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.topPathsStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("rank"))
+    val s = stage(spark, "top_paths", Tables(spark, dir).eventsSec
+      .select(col("user_id"), col("event_id"), col("sec"), col("event_type")))
+    s.drain()(EventStreams.topPathsStream(s.stream, s.state))
+    s.report.orderBy(col("rank"))
   }
 
-  /** G30 gate: streaming Cramér's V run MULTI-batch over the
-    * (l_returnflag, l_linestatus) pair — contingency cells fold
-    * associatively across 4 triggers; the final report equals E56's
-    * middle branch and is oracled by that branch's SQL. */
-  def streamCramers(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "cramers")
-    Tables(spark, dir).lineitem
-      .select(col("l_returnflag").as("a"), col("l_linestatus").as("b"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("a", StringType),
-        StructField("b", StringType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.cramersStream(src, s"$base/state",
-      "l_returnflag", "l_linestatus")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-  }
-
-  /** G31 gate: streaming winsorized/trimmed means run MULTI-batch —
-    * value cells fold associatively across 4 triggers; the final
-    * report equals E58's batch pass and shares its oracle verbatim. */
-  def streamWinsorized(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "winsorized")
-    Tables(spark, dir).lineitem
-      .select(col("l_returnflag").as("flag"),
-        expr("cast(round(l_extendedprice * 100) as long)").as("v"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("flag", StringType),
-        StructField("v", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.winsorizedStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("l_returnflag"))
-  }
-
-  /** G16 gate: the streaming constraint monitor — the SAME
-    * `checkConstraintsOf` plan on a streaming lineitem source in
-    * complete mode, run MULTI-batch (4 files, one per trigger): the
-    * conditional partials (violation counts, min offending key) merge
-    * associatively across triggers, so the final cumulative report
-    * equals D35's batch pass and shares its oracle verbatim. */
+  /** G16 gate: the SAME `checkConstraintsOf` plan on a streaming lineitem
+    * source in complete mode, MULTI-batch: the conditional partials
+    * (violation counts, min offending key) merge associatively across
+    * triggers, so the final report equals D35's batch pass and shares
+    * its oracle verbatim. */
   def streamConstraints(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "constraints")
-    val li = Tables(spark, dir).lineitem
-    li.repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream.schema(li.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.constraintMonitorStream(src)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_constraints")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
-    spark.table("graft_stream_constraints").orderBy(col("constraint_name"))
+    val s = stage(spark, "constraints", Tables(spark, dir).lineitem, 4)
+    s.toMemory(EventStreams.constraintMonitorStream(s.stream), "complete")
+      .orderBy(col("constraint_name"))
   }
 
-  /** G25 gate: streaming exact heavy hitters run MULTI-batch — per-key
-    * integer counts accumulate in the persisted state across 4 triggers
-    * (the one truly associative statistic), and the final verdict
-    * through the shared `heavyHittersFromCounts` filter equals E29's
-    * two-pass batch op, sharing its oracle verbatim. */
-  def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "heavy_hitters")
-    Tables(spark, dir).events.select(col("user_id"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.heavyHittersStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("user_id"))
-  }
-
-  /** G23 gate: the streaming Benford screen run MULTI-batch — per
-    * (source, digit) counts accumulate across 4 triggers (associative
-    * integers, zero drift), final verdict via the shared
-    * `benfordFromCounts` equals D42's batch op and shares its oracle. */
-  def streamBenford(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "benford")
-    Tables(spark, dir).events
-      .select(col("event_type").as("source"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.benfordStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-      .orderBy(col("source"), col("digit"))
-  }
-
-  /** G24 gate: the streaming Holt forecast run MULTI-batch — per
-    * (source, day) integer (Σcents, n) moments accumulate across 4
-    * triggers (a day split across batches folds to the same daily
-    * metric), and the final `holtOver` fold over the accumulated
-    * dailies equals D43's batch trajectory bit-for-bit, sharing its
-    * oracle. */
-  def streamHolt(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "holt")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.holtStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-      .orderBy(col("source"), col("day"))
-  }
-
-  /** G22 gate: the streaming seasonal monitor run MULTI-batch — the
-    * same accumulated-moments argument as G24; the final `seasonalOf`
-    * report equals D41's batch pass bit-for-bit, sharing its oracle. */
-  def streamSeasonal(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "seasonal")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.seasonalStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-      .orderBy(col("source"), col("day"))
-  }
-
-  /** G28 gate: the streaming Hampel filter run MULTI-batch — the same
-    * accumulated-moments argument as G22/G24; the final `hampelOver`
-    * report equals D55's batch pass bit-for-bit, sharing its oracle. */
-  def streamHampel(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "hampel")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.hampelStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-      .orderBy(col("source"), col("day"))
-  }
-
-  /** G14 gate: continuous changelog apply run MULTI-batch — the
-    * latest-wins reduction is associative-commutative over unique seqs
-    * (ChangelogSpec proves the algebra), so the 4-trigger fold of the
-    * D34 synthetic history converges to the batch snapshot no matter
-    * where the batch boundaries land; the final state rolled up by
-    * final-event class shares D34's oracle verbatim. */
+  /** G14 gate: continuous changelog apply, MULTI-batch — the latest-wins
+    * reduction is associative-commutative over unique seqs (ChangelogSpec
+    * proves the algebra), so the fold of the D34 synthetic history
+    * converges to the batch snapshot wherever the batch boundaries land;
+    * the final state rolled up by final-event class shares D34's oracle. */
   def streamChangelog(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "changelog")
-    graft.operators.LoadOps.ordersChangelog(spark, dir)
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("key", LongType),
-        StructField("seq", LongType), StructField("op", StringType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
     import spark.implicits._
-    sizedToInput(spark, base) {
-    val q = EventStreams.changelogStream(src.as[ChangeEvent], s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state")
+    val s = stage(spark, "changelog", LoadOps.ordersChangelog(spark, dir), 4)
+    s.drain()(EventStreams.changelogStream(s.stream.as[ChangeEvent], s.state))
+    spark.read.parquet(s.state)
       .groupBy(col("op").as("final_op"))
       .agg(count(lit(1)).as("n_keys"),
         sum(when(col("op") =!= "D", 1).otherwise(0)).cast("long").as("n_live"),
@@ -428,545 +327,147 @@ object StreamGate {
       .orderBy(col("final_op"))
   }
 
-  /** G13 gate: the streaming circuit breaker run as one availableNow
-    * batch over the D33 attempt log (the breaker automaton is
-    * order-dependent; one batch = the in-order case, and the per-batch
-    * sort key (sec, attempt_id) is total) — the emitted decisions roll
-    * up through the same aggregation as the batch replay and share
-    * D33's oracle verbatim. */
+  /** G13 gate: the streaming circuit breaker in one availableNow batch
+    * over the D33 attempt log (the automaton is order-dependent; one
+    * batch is the in-order case, and the per-batch sort key (sec,
+    * attempt_id) is total) — the decisions roll up through the batch
+    * replay's aggregation and share D33's oracle verbatim. */
   def streamBreaker(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "breaker")
-    Tables(spark, dir).eventsSec
+    import spark.implicits._
+    val s = stage(spark, "breaker", Tables(spark, dir).eventsSec
       .withColumn("failed", (col("sec") % 604800L < 86400L).cast("int"))
       .select(col("event_type").as("source"), col("sec"),
-        col("event_id").as("attempt_id"), col("failed"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("sec", LongType), StructField("attempt_id", LongType),
-        StructField("failed", IntegerType))))
-      .parquet(s"$base/in")
-    import spark.implicits._
-    sizedToInput(spark, base) {
-    val q = EventStreams
-      .circuitBreakerStream(src.as[Attempt], threshold = 5, cooldownSec = 14400L)
-      .toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_breaker")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
-    spark.table("graft_stream_breaker")
+        col("event_id").as("attempt_id"), col("failed")))
+    def n(d: String, as: String): Column =
+      sum(when(col("decision") === d, 1).otherwise(0)).cast("long").as(as)
+    s.toMemory(EventStreams.circuitBreakerStream(s.stream.as[Attempt], threshold = 5,
+        cooldownSec = 14400L).toDF(), "append")
       .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_attempts"),
-        sum(when(col("decision") === "ok", 1).otherwise(0)).cast("long").as("n_ok"),
-        sum(when(col("decision") === "fail", 1).otherwise(0)).cast("long").as("n_fail_closed"),
-        sum(when(col("decision") === "tripped", 1).otherwise(0)).cast("long").as("n_tripped"),
-        sum(when(col("decision") === "skipped", 1).otherwise(0)).cast("long").as("n_skipped"),
-        sum(when(col("decision") === "trial_fail", 1).otherwise(0)).cast("long").as("n_trial_fail"),
-        sum(when(col("decision") === "trial_ok", 1).otherwise(0)).cast("long").as("n_trial_ok"),
+      .agg(count(lit(1)).as("n_attempts"), n("ok", "n_ok"), n("fail", "n_fail_closed"),
+        n("tripped", "n_tripped"), n("skipped", "n_skipped"),
+        n("trial_fail", "n_trial_fail"), n("trial_ok", "n_trial_ok"),
         min(when(col("decision") === "tripped", col("sec"))).as("first_trip_sec"),
         max(when(col("decision").isin("tripped", "trial_fail"), col("sec"))).as("last_trip_sec"))
       .orderBy(col("source"))
   }
 
-  /** G17 gate: the streaming novelty ledger run as one availableNow
-    * batch over the corpus (the in-order case where batch-first carrier
-    * equals F60's global min-owner rule); the emitted per-doc reports
-    * share F60's oracle verbatim. */
+  /** G17 gate: the streaming novelty ledger in one batch over the corpus
+    * (the in-order case where the batch-first carrier equals F60's global
+    * min-owner rule); the per-doc reports share F60's oracle verbatim. */
   def streamNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "novelty")
-    Tables(spark, dir).documents.select(col("doc_id"), col("text"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.noveltyStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("doc_id"))
+    val s = stage(spark, "novelty",
+      Tables(spark, dir).documents.select(col("doc_id"), col("text")))
+    s.drain()(EventStreams.noveltyStream(s.stream, s.state))
+    s.report.orderBy(col("doc_id"))
   }
 
-  /** G11 gate: stream-static enrichment run MULTI-batch — each trigger
-    * of the fact stream broadcast-joins the static source catalog
-    * (stateless by construction, so any batch split emits the same
-    * rows); the emitted enriched facts roll up per catalog source and
-    * hash-match a plain SQL join oracle. */
+  /** G11 gate: stream-static enrichment, MULTI-batch — each trigger of the
+    * fact stream broadcast-joins the static source catalog (stateless, so
+    * any batch split emits the same rows); the enriched facts roll up per
+    * catalog source and hash-match a plain SQL join oracle. */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "enrich")
-    Tables(spark, dir).events
-      .select((col("user_id") % 25).as("source_key"), col("event_type"),
-        col("value"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source_key", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
+    val s = stage(spark, "enrich", Tables(spark, dir).events
+      .select((col("user_id") % 25).as("source_key"), col("event_type"), col("value")), 4)
     val dim = Tables(spark, dir).nation
       .select(col("n_nationkey").cast("long").as("source_key"), col("n_name"))
-    sizedToInput(spark, base) {
-    val q = EventStreams.enrichStream(src, dim, "source_key")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_enrich")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
-    spark.table("graft_stream_enrich")
+    s.toMemory(EventStreams.enrichStream(s.stream, dim, "source_key"), "append")
       .groupBy(col("n_name"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("value_sum"))
+      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("value_sum"))
       .orderBy(col("n_name"))
   }
 
-  /** G21 gate: the streaming CUSUM monitor run MULTI-batch (4 input
-    * files, one per trigger) — each (source, day) daily row is unique, so
-    * any batch split folds the same accumulated run log, and the final
-    * report equals D40's batch trajectory bit-for-bit (integer cents). */
-  def streamCusum(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "cusum")
-    graft.operators.LoadOps.dailyMd(spark, dir)
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("md", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.cusumStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-      .orderBy(col("source"), col("day"))
-  }
-
-  /** G33 gate: the streaming Page–Hinkley monitor run MULTI-batch (4
-    * input files, one per trigger) — each (source, day) daily row is
-    * unique, so any batch split folds the same accumulated run log
-    * through the shared cell store, and the final report equals D58's
-    * batch trajectory bit-for-bit (integer micro-cents), sharing its
-    * oracle verbatim. */
-  def streamPageHinkley(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "pagehinkley")
-    graft.operators.LoadOps.dailyMd(spark, dir)
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("md", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.pageHinkleyStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-      .orderBy(col("source"), col("day"))
-  }
-
-  /** G34 gate: the streaming PSI monitor run MULTI-batch (4 input
-    * files, one per trigger, arbitrary row split — cell folding is
-    * additive so slicing cannot matter). The completed run equals
-    * D61's batch pass and shares its oracle verbatim. */
-  def streamPsi(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "psi")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.psiStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
-
-  /** G35 gate: the streaming AUC monitor run MULTI-batch (4 files, one
-    * per trigger, arbitrary split — cell folding is additive). Equals
-    * E63's batch pass; shares its oracle verbatim. */
-  def streamAuc(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "auc")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("cast(round(value * 100) as long)").as("cents"),
-        expr("cast(((sec div 86400) + 4) % 7 in (0, 6) as long)").as("pos"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("cents", LongType), StructField("pos", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.aucStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
-
-  /** G36 gate: the streaming Mann–Kendall pager run MULTI-batch (4
-    * files, one per trigger — daily moments fold additively, so the day
-    * means recover exactly at any slicing). Equals D60's batch pass;
-    * shares its oracle verbatim. */
-  def streamMannKendall(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "mannkendall")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.mannKendallStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
-
-  /** G38 gate: the streaming forecast backtest run MULTI-batch (4
-    * files, one per trigger — daily moments fold additively). Equals
-    * D64's batch pass; shares its oracle verbatim. */
-  def streamForecastEval(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "feval")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.forecastEvalStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
-
-  /** G39 gate: the streaming calibration diagram run MULTI-batch (4
-    * files, one per trigger — cell folding additive). Equals D59's
-    * batch pass; shares its oracle verbatim. */
-  def streamCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "calib")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("cast(round(value * 100) as long)").as("cents"),
-        expr("cast(((sec div 86400) + 4) % 7 in (0, 6) as long)").as("pos"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("cents", LongType), StructField("pos", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.calibrationStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-      .orderBy(col("source"), col("bin"))
-  }
-
-  /** G37 gate: the streaming SRM pager run MULTI-batch (4 files, one
-    * per trigger — unit-set union is slicing-independent). Equals E64's
-    * batch pass; shares its oracle verbatim. */
-  def streamSrm(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "srm")
-    Tables(spark, dir).events
-      .select(col("event_type"), col("user_id"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.srmStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("event_type"))
-  }
-
-  /** G20 gate: the streaming A/B monitor run MULTI-batch (4 input files,
-    * one per trigger) — per-arm integer cent-moments accumulate
-    * associatively with zero float drift, so the final verdict equals the
-    * one-shot pass over the corpus and shares E36's oracle verbatim
-    * (values are cent-granular, so the cent-moment means/variances round
-    * to the same 4-decimal inputs the var_samp path sees). */
-  def streamAbtest(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "abtest")
-    Tables(spark, dir).events
-      .select(col("event_type"), col("user_id"), col("value"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("user_id", LongType), StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.abTtestStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("event_type"))
-  }
-
-  /** G18 gate: the streaming embedding-drift monitor run MULTI-batch
-    * (3 input files, one per trigger) — per-(label, dim, split)
-    * (sum, count) moments accumulate in state, means recover exactly from
-    * the totals, so the final report equals D36's batch pass over the
-    * full corpus and shares its oracle verbatim. */
-  def streamDrift(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "drift")
-    graft.operators.Similarity.vectors(spark, dir)
-      .repartition(3).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("label", IntegerType),
-        StructField("v", ArrayType(DoubleType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.embeddingDriftStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("label"))
-  }
-
-  /** G10 gate: the decay-average monitor run MULTI-batch (4 input files,
-    * one per trigger) — per-(source, day) partial duration sums fold into
-    * the persisted ledger, each trigger re-runs the shared D19 core over
-    * the summed ledger, so the final report equals the batch pass over
-    * the corpus and shares D19's oracle verbatim. */
-  def streamDecay(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "decay")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type"), col("sec"), col("value"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("sec", LongType), StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.decayLedgerStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-      .orderBy(col("source"), col("day"))
-  }
-
-  /** G26 gate: the chi-square hour-profile monitor run MULTI-batch
-    * (4 input files, one per trigger) — per-(source, hour-of-day) era
-    * count partials fold into the persisted BOUNDED cell ledger
-    * (≤ sources×24 rows at any horizon), each trigger re-runs the
-    * shared D47 assembly over the summed cells. The frozen baseline is
-    * configured to each source's corpus time midpoint (one driver-sized
-    * pre-scan), which is exactly the split the batch op derives itself —
-    * so the final report equals the batch pass and shares D47's oracle
-    * verbatim. */
-  def streamChi2(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "chi2")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type"), col("sec"))
-      .repartition(4).write.parquet(s"$base/in")
-    val baseline = Tables(spark, dir).eventsSec
-      .groupBy(col("event_type"))
-      .agg(expr("min(sec) + (max(sec) - min(sec)) div 2").as("ref_end_sec"))
-      .localCheckpoint(true)
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("sec", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.chi2LedgerStream(src, s"$base/state", baseline)
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("event_type"))
-  }
-
-  /** G27 gate: the change-point monitor run MULTI-batch (4 input files,
-    * one per trigger) — per-(source, day) exact integer (count, Σcents)
-    * partials fold into the persisted ledger, each trigger re-runs the
-    * shared D48 core over the merged dailies, so the final report
-    * equals the batch pass and shares D48's oracle verbatim. */
-  def streamChangepoint(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "chgpt")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type"), col("sec"), col("value"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("sec", LongType), StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.changepointLedgerStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
-
   /** G4 gate: a REAL stream-stream interval-overlap join — both sides
-    * arrive as independent multi-batch file streams (2 files each, one
-    * per trigger), every interval explodes to its grid cells exactly as
-    * the batch E28 plan does, and the streaming inner join meets on the
-    * cell equi key with the overlap predicate and canonical-cell dedup
-    * as residuals. Run to completion the append output contains exactly
-    * the batch result rows — pairs whose sides arrived in DIFFERENT
-    * micro-batches match through the join state, which is what
-    * distinguishes this from a per-batch map — so the gate shares E28's
-    * oracle verbatim. (The finite run keeps no watermark: inner-join
-    * state is bounded by the run; the production deployment adds the
-    * event-time range watermark for eviction — the G12 spec pins that
-    * machinery.) */
+    * arrive as independent multi-batch file streams, every interval
+    * explodes to its grid cells exactly as the batch E28 plan does, and
+    * the streaming inner join meets on the cell equi key with the overlap
+    * predicate and canonical-cell dedup as residuals. Pairs whose sides
+    * arrived in DIFFERENT micro-batches match through the join state, so
+    * the run's output is exactly the batch result and shares E28's
+    * oracle. (No watermark: inner-join state is bounded by the finite
+    * run; the G12 spec pins the eviction machinery.) */
   def streamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "ssjoin")
     val incidentSec = 600L; val purchaseSec = 120L
     val cellSec = math.max(incidentSec, purchaseSec)
     val ev = Tables(spark, dir).eventsSec
-    ev.filter(col("event_type") === "error")
-      .select(col("event_id").as("inc_id"), col("sec").as("s1"))
-      .repartition(2).write.parquet(s"$base/inA")
-    ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("pur_id"), col("sec").as("s2"))
-      .repartition(2).write.parquet(s"$base/inB")
-    def src(path: String, id: String, s: String) = spark.readStream
-      .schema(StructType(Seq(StructField(id, LongType), StructField(s, LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(path)
-    def cells(s: Column, e: Column) =
-      explode(sequence(floor(s / cellSec).cast("long"), floor(e / cellSec).cast("long")))
-    val inc = src(s"$base/inA", "inc_id", "s1")
+    val s = stage(spark, "ssjoin", ev.filter(col("event_type") === "error")
+      .select(col("event_id").as("inc_id"), col("sec").as("s1")), 2)
+    val purchases = s.input("inB", ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("pur_id"), col("sec").as("s2")), 2)
+    def cells(lo: Column, hi: Column) =
+      explode(sequence(floor(lo / cellSec).cast("long"), floor(hi / cellSec).cast("long")))
+    val inc = s.stream
       .withColumn("e1", col("s1") + incidentSec)
       .withColumn("cell", cells(col("s1"), col("e1")))
-    val pur = src(s"$base/inB", "pur_id", "s2")
+    val pur = purchases
       .withColumn("e2", col("s2") + purchaseSec)
       .withColumn("cell", cells(col("s2"), col("e2")))
-    val joined = inc.join(pur, Seq("cell"))
-      .filter(col("s1") <= col("e2") && col("s2") <= col("e1"))
-      .filter(col("cell") === floor(greatest(col("s1"), col("s2")) / cellSec).cast("long"))
-      .select(col("inc_id"), col("pur_id"),
-        greatest(col("s1"), col("s2")).as("ov_start"),
-        least(col("e1"), col("e2")).as("ov_end"))
-      .withColumn("ov_sec", col("ov_end") - col("ov_start"))
-    sizedToInput(spark, base) {
-    val q = joined.writeStream.outputMode("append").format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt").start()
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/out")
+    s.toParquet(inc.join(pur, Seq("cell"))
+        .filter(col("s1") <= col("e2") && col("s2") <= col("e1"))
+        .filter(col("cell") === floor(greatest(col("s1"), col("s2")) / cellSec).cast("long"))
+        .select(col("inc_id"), col("pur_id"),
+          greatest(col("s1"), col("s2")).as("ov_start"),
+          least(col("e1"), col("e2")).as("ov_end"))
+        .withColumn("ov_sec", col("ov_end") - col("ov_start")))
       .orderBy(col("inc_id"), col("pur_id"))
   }
 
-  /** G9 gate: streaming absence detection over a PLANTED-QUIET wire —
-    * two sources go silent at 60% of the corpus timeline (a
-    * deterministic integer cutoff both engines replay), the rest stay
-    * active to the end. One data batch folds every event into
-    * per-source freshness state; the closing no-data batch advances the
+  /** G9 gate: streaming absence detection over a PLANTED-QUIET wire — two
+    * sources go silent at 60% of the corpus timeline (a deterministic
+    * integer cutoff both engines replay), the rest stay active to the
+    * end. One data batch folds every event into per-source freshness
+    * state; the closing no-data batch of the default trigger advances the
     * event-time watermark to the corpus maximum and fires the
-    * EventTimeTimeout alerts: exactly the silenced sources emit, each
-    * with its true last-seen second (alert iff last_seen + staleAfter <
-    * watermark — the strict event-time-timeout inequality, replayed by
-    * the oracle). */
+    * EventTimeTimeout alerts: exactly the silenced sources emit, each with
+    * its true last-seen second (alert iff last_seen + staleAfter <
+    * watermark, the strict inequality the oracle replays). */
   def streamStaleness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = fresh(spark, "staleness")
     val ev = Tables(spark, dir).eventsSec
     val r = ev.agg(min(col("sec")).as("mn"), max(col("sec")).as("mx")).head()
     val cutoff = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 6L / 10L
-    ev.filter(!(col("event_type").isin("error", "purchase") && col("sec") > cutoff))
-      .select(timestamp_seconds(col("sec")).as("ts"),
-        col("event_type").as("source"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("ts", TimestampType),
-        StructField("source", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.stalenessStream(src.as[SourceEvent], 600L).toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_staleness")
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.table("graft_stream_staleness")
+    val s = stage(spark, "staleness",
+      ev.filter(!(col("event_type").isin("error", "purchase") && col("sec") > cutoff))
+        .select(timestamp_seconds(col("sec")).as("ts"), col("event_type").as("source")))
+    s.toMemory(EventStreams.stalenessStream(s.stream.as[SourceEvent], 600L).toDF(),
+        "append", availableNow = false)
       .select(col("source"), col("last_seen_sec"))
       .orderBy(col("source"))
   }
 
-  /** G12 gate: stream-stream LEFT OUTER interval join (errors ⟕
-    * purchases within ±300 s) with the production FLUSH-SENTINEL
-    * device: one far-future heartbeat row per side (id −1, corpus max +
-    * a day) advances BOTH sides' watermarks past every real row's close
-    * time, so the engine evicts-and-emits the null row for every
-    * unmatched real error before the stream ends — the outer join's
-    * final frame becomes deterministic (sentinels match only each
-    * other and are filtered from the gate). The report aggregates the
-    * sink per error: match count + flag, oracled by a plain batch LEFT
-    * JOIN — the stream's watermark bookkeeping must reproduce exactly
-    * what the one-shot join says. */
+  /** G12 gate: stream-stream LEFT OUTER interval join (errors ⟕ purchases
+    * within ±300 s) with the production FLUSH-SENTINEL device: one
+    * far-future heartbeat row per side (id −1, corpus max + a day)
+    * advances BOTH watermarks past every real row's close time, so the
+    * engine evicts-and-emits the null row for every unmatched real error
+    * before the stream ends — the outer join's final frame becomes
+    * deterministic (sentinels match only each other and are filtered out).
+    * The report aggregates the sink per error: match count + flag, oracled
+    * by a plain batch LEFT JOIN. */
   def streamOuterJoin(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "outerjoin")
     val ev = Tables(spark, dir).eventsSec
     val mx = ev.agg(max(col("sec"))).head().getLong(0)
-    def side(tpe: String, id: String, s: String): String = {
-      val path = s"$base/in_$tpe"
+    def side(tpe: String, id: String, s: String): DataFrame =
       ev.filter(col("event_type") === tpe)
         .select(col("event_id").as(id), col("sec").as(s))
-        .unionByName(spark.range(1).select(lit(-1L).as(id),
-          lit(mx + 86400L).as(s)))
-        .write.parquet(path)
-      path
-    }
-    val pa = side("error", "inc_id", "s1")
-    val pb = side("purchase", "pur_id", "s2")
-    def src(path: String, id: String, s: String) = spark.readStream
-      .schema(StructType(Seq(StructField(id, LongType), StructField(s, LongType))))
-      .parquet(path)
-      .select(col(id), col(s), timestamp_seconds(col(s)).as(s"${s}_ts"))
-      .withWatermark(s"${s}_ts", "0 seconds")
+        .unionByName(spark.range(1).select(lit(-1L).as(id), lit(mx + 86400L).as(s)))
+    def watermarked(df: DataFrame, id: String, s: String): DataFrame =
+      df.select(col(id), col(s), timestamp_seconds(col(s)).as(s"${s}_ts"))
+        .withWatermark(s"${s}_ts", "0 seconds")
+    val g = stage(spark, "outerjoin", side("error", "inc_id", "s1"))
+    val purchases = g.input("in_purchase", side("purchase", "pur_id", "s2"), 1)
     // the G4 cell device gives the join its required EQUALITY key; the
     // purchase side has exactly ONE cell (its own), so every (inc, pur)
     // pair meets in exactly one exploded error cell — no pair dedup —
     // and an error cell with no purchases contributes one null row the
     // count() then ignores
-    val inc = src(pa, "inc_id", "s1").withColumn("cell",
+    val inc = watermarked(g.stream, "inc_id", "s1").withColumn("cell",
       explode(sequence(expr("(s1 - 300) div 300"), expr("(s1 + 300) div 300"))))
-    val pur = src(pb, "pur_id", "s2").withColumn("cell", expr("s2 div 300"))
-    val joined = inc.alias("inc").join(pur.alias("pur"),
-      expr("inc.cell = pur.cell AND " +
-        "s2_ts >= s1_ts - interval 300 seconds AND " +
-        "s2_ts <= s1_ts + interval 300 seconds"), "leftOuter")
-      .select(col("inc_id"), col("pur_id"))
-    sizedToInput(spark, base) {
-    val q = joined.writeStream.outputMode("append").format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt").start()
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/out")
+    val pur = watermarked(purchases, "pur_id", "s2").withColumn("cell", expr("s2 div 300"))
+    g.toParquet(inc.alias("inc").join(pur.alias("pur"),
+        expr("inc.cell = pur.cell AND " +
+          "s2_ts >= s1_ts - interval 300 seconds AND " +
+          "s2_ts <= s1_ts + interval 300 seconds"), "leftOuter")
+        .select(col("inc_id"), col("pur_id")))
       .filter(col("inc_id") >= 0L)
       .groupBy(col("inc_id"))
       .agg(count(col("pur_id")).cast("long").as("n_matched"))
@@ -975,130 +476,73 @@ object StreamGate {
   }
 
   /** G5 gate: the count–min sketch as a STREAMING aggregate, MULTI-batch
-    * (4 files, one per trigger) in complete mode — per-trigger partial
-    * sketches merge element-wise through the state store, and counter
-    * addition is associative and order-independent, so the final sketch
-    * (and therefore every probe) equals E19's one-shot batch sketch
-    * bit-for-bit and shares its full DuckDB oracle. The probe walk is
-    * the SAME [[graft.operators.Relational.cmsProbeFrame]] the batch op
-    * uses — the two surfaces cannot drift. */
+    * in complete mode — counter addition is associative and
+    * order-independent, so the final sketch (and every probe) equals
+    * E19's one-shot batch sketch bit-for-bit and shares its oracle. The
+    * probe walk is the SAME [[Relational.cmsProbeFrame]] the batch op
+    * uses. */
   def streamCms(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.CmsAggregate
-    val base = fresh(spark, "cms")
-    Tables(spark, dir).events
-      .select(col("event_type").as("source"), col("user_id"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = src.groupBy(col("source"))
-      .agg(CmsAggregate.cmsSketch(spark, col("user_id")).as("sketch"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_cms")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
-    graft.operators.Relational.cmsProbeFrame(spark.table("graft_stream_cms"))
+    val s = stage(spark, "cms", Tables(spark, dir).events
+      .select(col("event_type").as("source"), col("user_id")), 4)
+    Relational.cmsProbeFrame(s.toMemory(s.stream.groupBy(col("source"))
+      .agg(CmsAggregate.cmsSketch(spark, col("user_id")).as("sketch")), "complete"))
   }
 
   /** G7 gate: the HLL distinct sketch as a STREAMING aggregate,
     * MULTI-batch complete mode — register merge is element-wise max
     * (idempotent AND order-independent), so the final estimate equals
-    * E20's batch sketch exactly; the gated frame is the same invariant
-    * verdict (exact distinct + within-bound flag, via the shared
-    * [[graft.operators.Relational.hllVerdictFrame]]) and shares E20's
-    * invariant oracle. The exact side comes from one batch pass over
-    * the SAME input files the stream consumed. */
+    * E20's batch sketch exactly; the gated frame is the shared
+    * [[Relational.hllVerdictFrame]] verdict, with the exact side from one
+    * batch pass over the SAME input files the stream consumed. */
   def streamHll(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.HllAggregate
-    val base = fresh(spark, "hll")
-    Tables(spark, dir).events
-      .select(col("event_type").as("source"), col("user_id"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = src.groupBy(col("source"))
-      .agg(HllAggregate.hllSketch(spark, col("user_id")).as("est_distinct_users"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_hll")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
-    val exact = spark.read.parquet(s"$base/in")
+    val s = stage(spark, "hll", Tables(spark, dir).events
+      .select(col("event_type").as("source"), col("user_id")), 4)
+    val est = s.toMemory(s.stream.groupBy(col("source"))
+      .agg(HllAggregate.hllSketch(spark, col("user_id")).as("est_distinct_users")), "complete")
+    val exact = spark.read.parquet(s"${s.base}/in")
       .groupBy(col("source"))
       .agg(countDistinct(col("user_id")).as("exact_distinct_users"))
-    graft.operators.Relational.hllVerdictFrame(
-      spark.table("graft_stream_hll").join(exact, Seq("source")))
+    Relational.hllVerdictFrame(est.join(exact, Seq("source")))
   }
 
   /** G6 gate: the fixed-bin quantile sketch as a STREAMING aggregate,
     * MULTI-batch complete mode — histogram-counter addition is
-    * associative and order-independent, so the final sketch equals
-    * E25's batch sketch bit-for-bit; the estimate walk is the shared
-    * [[graft.operators.Relational.quantileWalk]] and the entry shares
-    * E25's full oracle. The (lo, hi) domain pins from one tiny batch
-    * min/max over the same input before the stream starts (a fixed
-    * sketch parameter, exactly as the batch op derives it). */
+    * associative and order-independent, so the final sketch equals E25's
+    * batch sketch bit-for-bit; the estimate walk is the shared
+    * [[Relational.quantileWalk]]. The (lo, hi) domain pins from one tiny
+    * batch min/max over the staged input before the stream starts, as
+    * the batch op derives it. */
   def streamQuantile(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.QuantileAggregate
-    val base = fresh(spark, "quantile")
-    Tables(spark, dir).lineitem
-      .select(col("l_returnflag"), col("l_extendedprice"))
-      .repartition(4).write.parquet(s"$base/in")
-    val in = spark.read.parquet(s"$base/in")
-    val row = in.agg(min(col("l_extendedprice")), max(col("l_extendedprice"))).head()
+    val s = stage(spark, "quantile", Tables(spark, dir).lineitem
+      .select(col("l_returnflag"), col("l_extendedprice")), 4)
+    val row = spark.read.parquet(s"${s.base}/in")
+      .agg(min(col("l_extendedprice")), max(col("l_extendedprice"))).head()
     val (lo, hi) = (row.getDouble(0), row.getDouble(1))
-    val src = spark.readStream.schema(in.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = src.groupBy(col("l_returnflag"))
+    Relational.quantileWalk(s.toMemory(s.stream.groupBy(col("l_returnflag"))
       .agg(QuantileAggregate.quantileSketch(spark, col("l_extendedprice"), lo, hi)
-        .as("sketch"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_quantile")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
-    graft.operators.Relational.quantileWalk(
-      spark.table("graft_stream_quantile"), lo, hi)
+        .as("sketch")), "complete"), lo, hi)
   }
 
-  /** G8 gate: the Bloom filter as a STREAMING aggregate — the dim-side
-    * key set streams in MULTI-batch complete mode (bitset OR is
-    * associative, idempotent and order-independent, so the final bitset
-    * equals E23's batch build exactly); the finished filter then prunes
-    * the batch fact side and the report is E23's join rollup, sharing
-    * its full oracle (no false negatives — the bloom is plan surgery,
-    * invisible in the result). */
+  /** G8 gate: the Bloom filter as a STREAMING aggregate — the dim-side key
+    * set streams in MULTI-batch complete mode (bitset OR is associative,
+    * idempotent and order-independent, so the final bitset equals E23's
+    * batch build exactly); the finished filter then prunes the batch fact
+    * side and the report is E23's join rollup, sharing its oracle. */
   def streamBloom(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.BloomAggregate
-    val base = fresh(spark, "bloom")
     val t = Tables(spark, dir)
-    t.customer.filter(col("c_acctbal") > 9000.0)
-      .select(col("c_custkey"), col("c_mktsegment"))
-      .repartition(4).write.parquet(s"$base/in")
-    val dim = spark.read.parquet(s"$base/in")
+    val s = stage(spark, "bloom", t.customer.filter(col("c_acctbal") > 9000.0)
+      .select(col("c_custkey"), col("c_mktsegment")), 4)
+    val dim = spark.read.parquet(s"${s.base}/in")
     val nKeys = dim.count()
-    val src = spark.readStream.schema(dim.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = src.agg(BloomAggregate.bloomAgg(spark, col("c_custkey"), nKeys).as("bits"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_bloom")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
+    val bits = s.toMemory(
+      s.stream.agg(BloomAggregate.bloomAgg(spark, col("c_custkey"), nKeys).as("bits")),
+      "complete")
     t.orders
-      .join(broadcast(spark.table("graft_stream_bloom")))
+      .join(broadcast(bits))
       .filter(BloomAggregate.mightContain(col("bits"), col("o_custkey")))
       .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))

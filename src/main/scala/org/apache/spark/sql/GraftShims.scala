@@ -29,4 +29,9 @@ object GraftShims {
     * cache). */
   def unloadStateStores(): Unit =
     execution.streaming.state.StateStore.unloadAll()
+
+  /** `schema` with every field, array element and map value nullable
+    * (`StructType.asNullable` is `private[spark]`): the schema a file
+    * stream reads back what a batch frame wrote. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

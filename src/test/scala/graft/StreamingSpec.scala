@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.EventStreams
+import graft.streaming.{CellFold, EventStreams}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -542,8 +542,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val slices = Seq(dep, ind.take(16), ind.drop(16))
     val stateDir = java.nio.file.Files.createTempDirectory("g30").toString + "/state"
     val mem = MemoryStream[(String, String)]
-    val q = EventStreams.cramersStream(
-      mem.toDF().toDF("a", "b"), stateDir, "x", "y")
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("a", "b"), stateDir, CellFold.cramers("x", "y"))
     try {
       var fed = Seq.empty[(String, String)]
       slices.foreach { slice =>
@@ -566,7 +566,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val vals = (1 to 40).map(i => ("A", i.toLong * 100)) :+ (("A", 99999900L))
     val sd2 = java.nio.file.Files.createTempDirectory("g31").toString + "/state"
     val mem2 = MemoryStream[(String, Long)]
-    val q2 = EventStreams.winsorizedStream(mem2.toDF().toDF("flag", "v"), sd2)
+    val q2 = EventStreams.foldStream(mem2.toDF().toDF("flag", "v"), sd2, CellFold.winsorized)
     try {
       var fed = Seq.empty[(String, Long)]
       vals.grouped(14).foreach { slice =>
@@ -686,8 +686,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val all = (series("up", 900L) ++ series("down", -900L)).sortBy(_._2)
     val stateDir = java.nio.file.Files.createTempDirectory("g21").toString + "/state"
     val mem = MemoryStream[(String, Long, Long)]
-    val q = EventStreams.cusumStream(
-      mem.toDF().toDF("source", "day", "md"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "day", "md"), stateDir, CellFold.cusum)
     try {
       var fed = Seq.empty[(String, Long, Long)]
       all.grouped(14).foreach { slice =>
@@ -722,8 +722,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val all = (series("step", 14000L) ++ series("flat", 10000L)).sortBy(_._2)
     val stateDir = java.nio.file.Files.createTempDirectory("g33").toString + "/state"
     val mem = MemoryStream[(String, Long, Long)]
-    val q = EventStreams.pageHinkleyStream(
-      mem.toDF().toDF("source", "day", "md"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "day", "md"), stateDir, CellFold.pageHinkley)
     try {
       var fed = Seq.empty[(String, Long, Long)]
       all.grouped(22).foreach { slice =>
@@ -757,8 +757,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
     val stateDir = java.nio.file.Files.createTempDirectory("g34").toString + "/state"
     val mem = MemoryStream[(String, Long, Long)]
-    val q = EventStreams.psiStream(
-      mem.toDF().toDF("source", "day", "cents"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "day", "cents"), stateDir, CellFold.psi)
     try {
       var fed = Seq.empty[(String, Long, Long)]
       rows.grouped(rows.length / 4 + 1).foreach { slice =>
@@ -797,8 +797,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
     val stateDir = java.nio.file.Files.createTempDirectory("g35").toString + "/state"
     val mem = MemoryStream[(String, Long, Long)]
-    val q = EventStreams.aucStream(
-      mem.toDF().toDF("source", "cents", "pos"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "cents", "pos"), stateDir, CellFold.auc)
     try {
       var fed = Seq.empty[(String, Long, Long)]
       rows.grouped(rows.length / 4 + 1).foreach { slice =>
@@ -831,8 +831,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         ("flat", d, 500L), ("flat", d, 500L)) }
     val stateDir = java.nio.file.Files.createTempDirectory("g36").toString + "/state"
     val mem = MemoryStream[(String, Long, Long)]
-    val q = EventStreams.mannKendallStream(
-      mem.toDF().toDF("source", "day", "cents"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "day", "cents"), stateDir, CellFold.mannKendall)
     try {
       var fed = Seq.empty[(String, Long, Long)]
       rows.grouped(rows.length / 4 + 1).foreach { slice =>
@@ -866,8 +866,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       (1L to 20L).map(u => ("bad", u * 2L))
     val stateDir = java.nio.file.Files.createTempDirectory("g37").toString + "/state"
     val mem = MemoryStream[(String, Long)]
-    val q = EventStreams.srmStream(
-      mem.toDF().toDF("event_type", "user_id"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("event_type", "user_id"), stateDir, CellFold.srm)
     try {
       var fed = Seq.empty[(String, Long)]
       rows.grouped(rows.length / 4 + 1).foreach { slice =>
@@ -886,7 +886,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       assert(fin("ok") == ((15L, 15L, 0)), "balanced group paged")
       assert(fin("bad") == ((20L, 0L, 1)), "one-arm group must page")
       // the unit ledger carries exactly the distinct units, not the rows
-      val stateRows = spark.read.parquet(stateDir + "/units").count()
+      val stateRows = spark.read.parquet(stateDir + "/cells").count()
       assert(stateRows == rows.distinct.size.toLong,
         s"state $stateRows != distinct units ${rows.distinct.size}")
     } finally q.stop()
@@ -901,8 +901,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       Seq(("ramp", d, d * 100L + 3L), ("ramp", d, d * 100L - 3L)) }
     val stateDir = java.nio.file.Files.createTempDirectory("g38").toString + "/state"
     val mem = MemoryStream[(String, Long, Long)]
-    val q = EventStreams.forecastEvalStream(
-      mem.toDF().toDF("source", "day", "cents"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "day", "cents"), stateDir, CellFold.forecastEval)
     try {
       var fed = Seq.empty[(String, Long, Long)]
       rows.grouped(rows.length / 4 + 1).foreach { slice =>
@@ -932,8 +932,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
     val stateDir = java.nio.file.Files.createTempDirectory("g39").toString + "/state"
     val mem = MemoryStream[(String, Long, Long)]
-    val q = EventStreams.calibrationStream(
-      mem.toDF().toDF("source", "cents", "pos"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "cents", "pos"), stateDir, CellFold.calibration)
     try {
       var fed = Seq.empty[(String, Long, Long)]
       rows.grouped(rows.length / 4 + 1).foreach { slice =>
@@ -976,8 +976,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .localCheckpoint(true)
     val stateDir = java.nio.file.Files.createTempDirectory("g26").toString + "/state"
     val mem = MemoryStream[(String, Long)]
-    val q = EventStreams.chi2LedgerStream(
-      mem.toDF().toDF("event_type", "sec"), stateDir, baseline)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("event_type", "sec"), stateDir, CellFold.chi2(baseline))
     try {
       var fed = Seq.empty[(String, Long)]
       rows.grouped(rows.length / 4 + 1).foreach { slice =>
@@ -1024,8 +1024,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     val stateDir = java.nio.file.Files.createTempDirectory("g20").toString + "/state"
     val mem = MemoryStream[(String, Long, Double)]
-    val q = EventStreams.abTtestStream(
-      mem.toDF().toDF("event_type", "user_id", "value"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("event_type", "user_id", "value"), stateDir, CellFold.abtest)
     try {
       val third = (ev.length + 2) / 3
       var fed = Array.empty[(String, Long, Double)]
@@ -1064,8 +1064,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .sortBy(_._1)
     val stateDir = java.nio.file.Files.createTempDirectory("g18").toString + "/state"
     val mem = MemoryStream[(Long, Int, Seq[Double])]
-    val q = EventStreams.embeddingDriftStream(
-      mem.toDF().toDF("vec_id", "label", "v"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("vec_id", "label", "v"), stateDir, CellFold.drift)
     try {
       val third = (vecs.length + 2) / 3
       var fed = Array.empty[(Long, Int, Seq[Double])]
@@ -1166,8 +1166,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         (if (d >= 21L) 400L else 0L) + (if (i % 2 == 0) 3L else -3L))
     val stateDir = java.nio.file.Files.createTempDirectory("g22").toString + "/state"
     val mem = MemoryStream[(String, Long, Long)]
-    val q = EventStreams.seasonalStream(
-      mem.toDF().toDF("source", "day", "cents"), stateDir, trainDays = 14L)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "day", "cents"), stateDir,
+      CellFold.seasonal(trainDays = 14L))
     try {
       var fed = Seq.empty[(String, Long, Long)]
       ev.grouped(45).foreach { slice =>
@@ -1203,8 +1204,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } yield (src, d, base + (if (i == 0) 5L else -5L))
     val stateDir = java.nio.file.Files.createTempDirectory("g24").toString + "/state"
     val mem = MemoryStream[(String, Long, Long)]
-    val q = EventStreams.holtStream(
-      mem.toDF().toDF("source", "day", "cents"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "day", "cents"), stateDir, CellFold.holt)
     try {
       var fed = Seq.empty[(String, Long, Long)]
       ev.grouped(33).foreach { slice =>
@@ -1235,7 +1236,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .selectExpr("cast(user_id as long)").collect().map(_.getLong(0))
     val stateDir = java.nio.file.Files.createTempDirectory("g25").toString + "/state"
     val mem = MemoryStream[Long]
-    val q = EventStreams.heavyHittersStream(mem.toDF().toDF("user_id"), stateDir)
+    val q = EventStreams.foldStream(mem.toDF().toDF("user_id"), stateDir, CellFold.heavyHitters)
     try {
       var fed = Array.empty[Long]
       ids.grouped((ids.length + 2) / 3).foreach { slice =>
@@ -1270,8 +1271,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .flatMap(p => Seq(p._1, p._2))
     val stateDir = java.nio.file.Files.createTempDirectory("g23").toString + "/state"
     val mem = MemoryStream[(String, Long)]
-    val q = EventStreams.benfordStream(
-      mem.toDF().toDF("source", "cents"), stateDir)
+    val q = EventStreams.foldStream(
+      mem.toDF().toDF("source", "cents"), stateDir, CellFold.benford)
     try {
       var fed = Seq.empty[(String, Long)]
       all.grouped(700).foreach { slice =>

@@ -5,6 +5,19 @@ import json, sys, glob, os
 import duckdb
 import pandas as pd
 
+# --only PREFIX compares only the oracle entries whose name starts with
+# PREFIX (e.g. after `Verify <sf> <out> 'stream_*'`) and counts N/N over them
+only = None
+if "--only" in sys.argv:
+    i = sys.argv.index("--only")
+    if i + 1 >= len(sys.argv):
+        sys.exit("--only needs a name prefix")
+    only = sys.argv[i + 1]
+    del sys.argv[i:i + 2]
+    if "--record" in sys.argv:
+        sys.exit("--record rewrites CORRECTNESS_LOCAL.json from the full oracle set; "
+                 "it cannot run with --only")
+
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify_out"
 
@@ -14,6 +27,9 @@ for p in glob.glob(f"{sf_dir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+all_oracle = set(oracle)
+if only is not None:
+    oracle = {k: v for k, v in oracle.items() if k.startswith(only)}
 results = {}
 for name, sql in sorted(oracle.items()):
     try:
@@ -66,7 +82,7 @@ for name, v in sorted(results.items()):
 # rows-only queries (no oracle)
 for d in sorted(glob.glob(f"{out_dir}/*/")):
     name = os.path.basename(d.rstrip("/"))
-    if name not in oracle:
+    if name not in all_oracle and (only is None or name.startswith(only)):
         try:
             n = len(pd.read_parquet(d))
             print(f"· {name}: rows-only, {n} rows")
