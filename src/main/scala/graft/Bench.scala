@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Headline benchmark. Prints the full JSON line to stdout, writes the
   * SAME json to BENCH_LOCAL.json, and prints a COMPACT summary JSON as
   * the LAST stdout line: the driver keeps only a ~2000-char stdout tail,
@@ -140,7 +142,7 @@ object Bench {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
         .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(): Unit
@@ -218,7 +220,7 @@ object Bench {
       try src.getLines().find(_.startsWith("Cached:"))
         .map(_.split("\\s+")(1).toLong / 1024L).getOrElse(-1L)
       finally src.close() // called per rep — an unclosed fd per sample would pile up
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
     // r17 wander forensics extension: the r16 GC/page-cache pair explained
     // most but not all slow samples (dedup_containment p2_2 12.27 s with
     // 10 ms GC fit no hypothesis), so every sample now also carries the
@@ -246,7 +248,7 @@ object Bench {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try math.round(src.getLines().next().split("\\s+")(0).toDouble * 100)
       finally src.close()
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
     // per-sample evidence row: [label, sec, gc_ms inside the rep,
     // cached_mb before it, shuffle_read_mb, shuffle_write_mb, spill_mb,
     // load100 at start]; reported for pinned entries, >1.3x disagreers,
@@ -279,7 +281,7 @@ object Bench {
       val sec = (System.nanoTime() - t0) / 1e9
       recordEvidence(name, "build", sec, g0, c0, s0, ld)
       sec
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
     val indexSec = timedBuild("ann_ivf_index", () => {
       rm(new java.io.File(graft.operators.Similarity.ivfRoot(spark, sfDir)))
       graft.operators.Similarity.ivfIndex(spark, sfDir): Unit
@@ -361,7 +363,7 @@ object Bench {
             fn(spark, sfDir).count()
             Some((System.nanoTime() - t0) / 1e9)
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[bench] $name failed: ${e.getMessage}")
               None
           }
@@ -609,7 +611,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(new java.io.File(out), "UTF-8")
       try w.println(line) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] write $out failed: ${e.getMessage}") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] write $out failed: ${e.getMessage}") }
     // stdout contract (r15): the driver keeps only a ~2000-char TAIL of
     // stdout and parses a JSON object out of it. Two failure modes kept
     // `parsed` null through r14: (a) the full line is ~13 KB so its head

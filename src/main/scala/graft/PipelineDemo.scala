@@ -319,7 +319,7 @@ object PipelineDemo {
           PipelineCfg.fromJson(cfg(s"o_orderstatus = $st"))).collect(): Unit
       }
       // the crashed writer: a version dir with data but no manifest entry
-      spark.read.parquet(s"$dir/orders.parquet").filter(col("o_orderkey") < 40)
+      graft.io.ParquetSchemas.read(spark, s"$dir/orders.parquet").filter(col("o_orderkey") < 40)
         .write.mode("overwrite").parquet(s"$target/orders_snap/v_0_0_0")
       val (kept, deleted) = Pipeline.vacuum(spark, target, "orders_snap")
       def gen(label: String, paths: Seq[String]) = {
@@ -571,7 +571,7 @@ object PipelineDemo {
     val base = new Path(target, name)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(base, true): Unit
-    val orders = spark.read.parquet(s"$dir/orders.parquet")
+    val orders = graft.io.ParquetSchemas.read(spark, s"$dir/orders.parquet")
     def slice(st: String) = orders.filter(col("o_orderstatus") === st)
     def publishMain(st: String): Unit = {
       val verName = s"v_${System.currentTimeMillis()}_" +

@@ -4,12 +4,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Typed accessors for the testdata layout (one parquet file per table).
+/** Typed accessors for the input tables: `<dir>/<table>.parquet`, each a
+  * parquet file or a directory of parquet files.
   *
-  * Models the reference's staged tables (op-etl stages every source into a
-  * FileGDB before processing; see /root/reference/etl/stage_files.py). Here
-  * the staging store is columnar parquet, so every downstream operator gets
-  * predicate pushdown and column pruning for free.
+  * Models the reference's staged tables (op-etl stages every source once
+  * into a FileGDB, then reads the staged tables many times). Here the
+  * staging store is columnar parquet, so every downstream operator gets
+  * predicate pushdown and column pruning for free, and each table's schema
+  * is inferred once per process ([[graft.io.ParquetSchemas]]).
   */
 object Tables {
   /** Default for `graft.scratch.root` — the single place the literal
@@ -68,19 +70,19 @@ object Tables {
 }
 
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame =
+    graft.io.ParquetSchemas.read(spark, s"$dir/$name.parquet")
 
-  /** The testdata files are single parquet row groups → one input
-    * partition. For tables whose operators do heavy per-row work BEFORE
-    * any shuffle (text analysis, vector math, fingerprinting), spread the
-    * rows across the cluster first; the shuffle is tiny next to the
-    * compute it parallelizes. (On a real multi-file/multi-row-group
-    * layout the scan itself provides the splits and this is a no-op
-    * cost-wise.) Conf-gated (`graft.spread.documents`, default on) so the
-    * exchange's cost on THIS single-row-group layout is measurable with
-    * one flag flip — it was the prime suspect for the r8 text-family
-    * bench drift, and a real deployment on a properly-split layout would
-    * turn it off. */
+  /** A small table scans as few input partitions: one per file or row
+    * group, and the inputs here are one file or a handful. For tables whose
+    * operators do heavy per-row work BEFORE any shuffle (text analysis,
+    * vector math, fingerprinting), spread the rows across the cluster
+    * first; the shuffle is tiny next to the compute it parallelizes. (On a
+    * layout with many splits the scan itself provides them and this is a
+    * no-op cost-wise.) Conf-gated (`graft.spread.documents`, default on) so
+    * the exchange's cost is measurable with one flag flip — it was the
+    * prime suspect for the r8 text-family bench drift, and a deployment on
+    * a well-split layout would turn it off. */
   private def spread(df: DataFrame): DataFrame =
     if (spark.conf.get("graft.spread.documents", "true").toBoolean)
       df.repartition(spark.sparkContext.defaultParallelism)

@@ -2,6 +2,7 @@ package graft.config
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import graft.io.ParquetSchemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -203,7 +204,7 @@ object Pipeline {
         // record rows. Discovered layer names are sanitized to safe
         // feature-class names at staging time (utils.py safe naming),
         // so each layer can be loaded under its own target directory.
-        graft.sources.Ingest.unpackRecords(spark.read.parquet(src.path))
+        graft.sources.Ingest.unpackRecords(ParquetSchemas.read(spark, src.path))
           .withColumn("layer_name", graft.operators.Staging.safeName(col("layer_name")))
       case "ogc" =>
         // OGC service source (download_ogc.py): `$path/service` holds the
@@ -211,8 +212,8 @@ object Pipeline {
         // discover → verify every next-link chain → land records ONLY
         // from chain-complete collections, each staged as its own layer
         graft.sources.Ingest.stageOgcRecords(
-            spark.read.parquet(s"${src.path}/service"),
-            spark.read.parquet(s"${src.path}/pages"))
+            ParquetSchemas.read(spark, s"${src.path}/service"),
+            ParquetSchemas.read(spark, s"${src.path}/pages"))
           .withColumn("layer_name", graft.operators.Staging.safeName(col("layer_name")))
       case "atom" =>
         // Atom feed source (download_atom.py): `$path/feed` holds the
@@ -222,15 +223,15 @@ object Pipeline {
         // gated by the source's filterServices), and land each
         // download-class link's records as its own per-entry layer
         graft.sources.Ingest.stageAtomRecords(
-            spark.read.parquet(s"${src.path}/feed"),
-            spark.read.parquet(s"${src.path}/files"),
+            ParquetSchemas.read(spark, s"${src.path}/feed"),
+            ParquetSchemas.read(spark, s"${src.path}/files"),
             src.filterServices)
           .withColumn("layer_name", graft.operators.Staging.safeName(col("layer_name")))
       case "esrijson" =>
         // Esri JSON response payloads (stage_files.py:602
         // import_esri_json): `$path` holds the raw response docs; the
         // typed parse lands features[].attributes + point geometries
-        graft.sources.Ingest.parseEsriFeatures(spark.read.parquet(src.path))
+        graft.sources.Ingest.parseEsriFeatures(ParquetSchemas.read(spark, src.path))
       case "rest" =>
         // REST service source (download_rest.py): `$path/service` holds
         // the service docs, `$path/layers` the layer-addressed features;
@@ -238,11 +239,11 @@ object Pipeline {
         // single-layer FeatureServer docs fall back to themselves) and
         // land each discovered layer's features as its own staged layer
         graft.sources.Ingest.stageRestRecords(
-            spark.read.parquet(s"${src.path}/service"),
-            spark.read.parquet(s"${src.path}/layers"),
+            ParquetSchemas.read(spark, s"${src.path}/service"),
+            ParquetSchemas.read(spark, s"${src.path}/layers"),
             src.include.getOrElse(Seq.empty))
           .withColumn("layer_name", graft.operators.Staging.safeName(col("layer_name")))
-      case _      => spark.read.parquet(src.path)
+      case _      => ParquetSchemas.read(spark, src.path)
     }
     val swept = src.oidSweep match {
       case Some(OidSweepCfg(key, n)) =>

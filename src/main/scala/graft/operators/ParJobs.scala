@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
+
 /** Run independent Spark actions concurrently on one session — the
   * documented multi-job pattern (guide §2.6: actions are only sequential
   * because driver code calls them sequentially; a small pool lets the
@@ -16,13 +19,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * interruptOnCancel). If any thunk throws, the whole group is cancelled
   * and the pool is shut down with interruption BEFORE the failure
   * propagates — a failing thunk never leaves sibling jobs running to
-  * completion on the shared session after the caller has thrown. */
+  * completion on the shared session after the caller has thrown.
+  *
+  * `timeout` bounds the wait for all thunks; by default there is none, so
+  * a caller that wants a bound states it. On expiry the group is cancelled
+  * like on a failure and the `TimeoutException` propagates. */
 object ParJobs {
 
-  def run[A](spark: SparkSession, desc: String, threads: Int = 8)(
-      thunks: Seq[() => A]): Seq[A] = {
+  def run[A](spark: SparkSession, desc: String, threads: Int = 8,
+      timeout: Duration = Duration.Inf)(thunks: Seq[() => A]): Seq[A] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
     val sc = spark.sparkContext
     val group = s"$desc-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
@@ -31,14 +37,14 @@ object ParJobs {
       sc.setJobGroup(group, desc, interruptOnCancel = true)
       try t() finally sc.clearJobGroup()
     }))
-    try Await.result(work, 30.minutes)
+    try Await.result(work, timeout)
     catch {
       case e: Throwable =>
         // cancelJobGroupAndFutureJobs is STICKY: a sibling thunk that was
         // mid-planning (no active job yet) and submits after the failure
         // is cancelled too — plain cancelJobGroup only kills jobs already
         // running, leaving that race open
-        try sc.cancelJobGroupAndFutureJobs(group) catch { case _: Throwable => () }
+        try sc.cancelJobGroupAndFutureJobs(group) catch { case NonFatal(_) => () }
         pool.shutdownNow()
         throw e
     } finally pool.shutdown()
@@ -47,6 +53,7 @@ object ParJobs {
   /** Materialize independent frames concurrently (each eagerly
     * localCheckpointed so the work happens inside this call). */
   def materialize(spark: SparkSession, desc: String,
-      mk: Seq[() => DataFrame], threads: Int = 8): Seq[DataFrame] =
-    run(spark, desc, threads)(mk.map(m => () => m().localCheckpoint(true)))
+      mk: Seq[() => DataFrame], threads: Int = 8,
+      timeout: Duration = Duration.Inf): Seq[DataFrame] =
+    run(spark, desc, threads, timeout)(mk.map(m => () => m().localCheckpoint(true)))
 }

@@ -336,13 +336,16 @@ object Scorecard {
     * documented multi-job pattern); used for the shared-collapse
     * materialization, the per-gate frame thunks, and the per-gate digest
     * collects. Body hoisted to [[ParJobs]] (r18) so the multi-branch
-    * batch entries share the same job-group failure containment. */
+    * batch entries share the same job-group failure containment. A
+    * scorecard that has not finished in [[ParTimeout]] is cancelled. */
   private def parRun[A](spark: SparkSession)(thunks: Seq[() => A]): Seq[A] =
-    ParJobs.run(spark, "graft stream scorecard")(thunks)
+    ParJobs.run(spark, "graft stream scorecard", timeout = ParTimeout)(thunks)
 
   private def parMaterialize(spark: SparkSession,
       mk: Seq[() => DataFrame]): Seq[DataFrame] =
-    ParJobs.materialize(spark, "graft stream scorecard", mk)
+    ParJobs.materialize(spark, "graft stream scorecard", mk, timeout = ParTimeout)
+
+  private val ParTimeout = scala.concurrent.duration.Duration(30, "minutes")
 
   private def buildFrames(spark: SparkSession,
       dir: String): Seq[(String, DataFrame)] = {

@@ -86,6 +86,10 @@ object StreamGate {
     def state: String = s"$base/state"
     def report: DataFrame = spark.read.parquet(s"$state/report")
 
+    /** The staged input as a batch frame, read with the stream's schema:
+      * no footer-read job to infer it again. */
+    def batch: DataFrame = spark.read.schema(stream.schema).parquet(s"$base/in")
+
     /** A second input under the same root (see [[fileStream]]). */
     def input(sub: String, df: DataFrame, files: Int): DataFrame =
       fileStream(spark, s"$base/$sub", df, files)
@@ -501,7 +505,7 @@ object StreamGate {
       .select(col("event_type").as("source"), col("user_id")), 4)
     val est = s.toMemory(s.stream.groupBy(col("source"))
       .agg(HllAggregate.hllSketch(spark, col("user_id")).as("est_distinct_users")), "complete")
-    val exact = spark.read.parquet(s"${s.base}/in")
+    val exact = s.batch
       .groupBy(col("source"))
       .agg(countDistinct(col("user_id")).as("exact_distinct_users"))
     Relational.hllVerdictFrame(est.join(exact, Seq("source")))
@@ -518,7 +522,7 @@ object StreamGate {
     import graft.functions.QuantileAggregate
     val s = stage(spark, "quantile", Tables(spark, dir).lineitem
       .select(col("l_returnflag"), col("l_extendedprice")), 4)
-    val row = spark.read.parquet(s"${s.base}/in")
+    val row = s.batch
       .agg(min(col("l_extendedprice")), max(col("l_extendedprice"))).head()
     val (lo, hi) = (row.getDouble(0), row.getDouble(1))
     Relational.quantileWalk(s.toMemory(s.stream.groupBy(col("l_returnflag"))
@@ -536,7 +540,7 @@ object StreamGate {
     val t = Tables(spark, dir)
     val s = stage(spark, "bloom", t.customer.filter(col("c_acctbal") > 9000.0)
       .select(col("c_custkey"), col("c_mktsegment")), 4)
-    val dim = spark.read.parquet(s"${s.base}/in")
+    val dim = s.batch
     val nKeys = dim.count()
     val bits = s.toMemory(
       s.stream.agg(BloomAggregate.bloomAgg(spark, col("c_custkey"), nKeys).as("bits")),

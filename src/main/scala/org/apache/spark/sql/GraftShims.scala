@@ -34,4 +34,11 @@ object GraftShims {
     * (`StructType.asNullable` is `private[spark]`): the schema a file
     * stream reads back what a batch frame wrote. */
   def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
+  /** Whether Spark's file index skips a file or directory of this name
+    * (`HadoopFSUtils.shouldFilterOutPathName` is `private[spark]`): names
+    * starting with `_` or `.`, except parquet summary files and `_k=v`
+    * partition dirs, and in-flight `._COPYING_` copies. */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }
