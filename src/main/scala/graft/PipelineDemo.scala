@@ -153,7 +153,7 @@ object PipelineDemo {
   }
 
   /** The same declarative run published through MANIFEST COMMIT (the
-    * S3-safe mode, `graft.publish.mode=manifest`): data lands once in
+    * S3-safe mode, load `"publish": "manifest"`): data lands once in
     * immutable version directories, the commit is one tiny manifest PUT.
     * The summary row per source reports the run's reconcile AND the
     * count a downstream READER gets by resolving the manifest
@@ -171,26 +171,45 @@ object PipelineDemo {
          |     "select": ["c_custkey", "c_name", "c_mktsegment"],
          |     "where": "c_mktsegment = 'BUILDING'"}
          |  ],
-         |  "load": {"target": "$target", "mode": "truncate"}
+         |  "load": {"target": "$target", "mode": "truncate", "publish": "manifest"}
          |}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      val summary = Pipeline.run(spark, PipelineCfg.fromJson(json)).collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      // reader-side reconcile THROUGH the manifest
-      val rows = summary.map { case (src, loaded) =>
-        val live = Pipeline.resolvePublished(spark, target, src)
-        (src, loaded, spark.read.parquet(live: _*).count())
-      }
-      rows.toSeq.toDF("source", "rows_loaded", "rows_resolved")
-        .orderBy(col("source"))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
+    val summary = Pipeline.run(spark, PipelineCfg.fromJson(json)).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    // reader-side reconcile THROUGH the manifest
+    val rows = summary.map { case (src, loaded) =>
+      val live = Pipeline.resolvePublished(spark, target, src)
+      (src, loaded, spark.read.parquet(live: _*).count())
     }
+    rows.toSeq.toDF("source", "rows_loaded", "rows_resolved")
+      .orderBy(col("source"))
+  }
+
+  /** Manifest-publish the `orders` rows matching `where` into `target` as
+    * source `name`: the one-source snapshot document the generation demos
+    * below run once per generation. */
+  private def publishOrders(spark: SparkSession, dir: String, target: String,
+      where: String, name: String = "orders_snap", mode: String = "truncate"): Unit = {
+    val json =
+      s"""{
+         |  "sources": [
+         |    {"name": "$name", "path": "$dir/orders.parquet",
+         |     "where": "$where"}
+         |  ],
+         |  "load": {"target": "$target", "mode": "$mode", "publish": "manifest"}
+         |}""".stripMargin
+    Pipeline.run(spark, PipelineCfg.fromJson(json)).collect(): Unit
+  }
+
+  /** One stats row of a resolved generation, read from its parquet:
+    * (label, n_rows, n_keys, min_key, max_key) over `o_orderkey`. */
+  private def gen(spark: SparkSession, label: String,
+      paths: Seq[String]): (String, Long, Long, Long, Long) = {
+    val r = spark.read.parquet(paths: _*)
+      .agg(count(lit(1)).as("n_rows"),
+        countDistinct(col("o_orderkey")).as("n_keys"),
+        min(col("o_orderkey")).as("min_key"),
+        max(col("o_orderkey")).as("max_key")).head()
+    (label, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
   }
 
   /** TIME TRAVEL over a manifest-published target (H1h): two truncate
@@ -207,37 +226,12 @@ object PipelineDemo {
   def runTimeTravel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val target = Tables.scratch(spark, "graft_pipeline_travel")
-    def cfg(where: String) =
-      s"""{
-         |  "sources": [
-         |    {"name": "orders_snap", "path": "$dir/orders.parquet",
-         |     "where": "$where"}
-         |  ],
-         |  "load": {"target": "$target", "mode": "truncate"}
-         |}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderstatus = 'F'"))).collect()
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderstatus = 'O'"))).collect()
-      def gen(label: String, paths: Seq[String]) = {
-        val r = spark.read.parquet(paths: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("o_orderkey")).as("n_keys"),
-            min(col("o_orderkey")).as("min_key"),
-            max(col("o_orderkey")).as("max_key")).head()
-        (label, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      }
-      Seq(gen("current", Pipeline.resolvePublished(spark, target, "orders_snap")),
-          gen("previous", Pipeline.resolvePrevGeneration(spark, target, "orders_snap")))
-        .toDF("generation", "n_rows", "n_keys", "min_key", "max_key")
-        .orderBy(col("generation"))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
-    }
+    publishOrders(spark, dir, target, "o_orderstatus = 'F'")
+    publishOrders(spark, dir, target, "o_orderstatus = 'O'")
+    Seq(gen(spark, "current", Pipeline.resolvePublished(spark, target, "orders_snap")),
+        gen(spark, "previous", Pipeline.resolvePrevGeneration(spark, target, "orders_snap")))
+      .toDF("generation", "n_rows", "n_keys", "min_key", "max_key")
+      .orderBy(col("generation"))
   }
 
   /** H1i: zero-copy SHALLOW CLONE of a manifest-published target
@@ -252,43 +246,18 @@ object PipelineDemo {
     import spark.implicits._
     val srcTgt = Tables.scratch(spark, "graft_clone_src")
     val cloneTgt = Tables.scratch(spark, "graft_clone_dst")
-    def cfg(where: String) =
-      s"""{
-         |  "sources": [
-         |    {"name": "orders_snap", "path": "$dir/orders.parquet",
-         |     "where": "$where"}
-         |  ],
-         |  "load": {"target": "$srcTgt", "mode": "truncate"}
-         |}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderstatus = 'F'"))).collect()
-      Pipeline.clonePublish(spark, srcTgt, "orders_snap", cloneTgt, "orders_clone")
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderstatus = 'O'"))).collect()
-      def gen(label: String, paths: Seq[String]) = {
-        val r = spark.read.parquet(paths: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("o_orderkey")).as("n_keys"),
-            min(col("o_orderkey")).as("min_key"),
-            max(col("o_orderkey")).as("max_key")).head()
-        (label, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      }
-      // r18: the two generation reads are independent parquet scans —
-      // run them concurrently (guide §2.6) instead of as two serial jobs
-      graft.operators.ParJobs.run(spark, "graft clone gens", threads = 2)(Seq(
-          () => gen("clone_pinned",
-            Pipeline.resolvePublished(spark, cloneTgt, "orders_clone")),
-          () => gen("source_live",
-            Pipeline.resolvePublished(spark, srcTgt, "orders_snap"))))
-        .toDF("view_name", "n_rows", "n_keys", "min_key", "max_key")
-        .orderBy(col("view_name"))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
-    }
+    publishOrders(spark, dir, srcTgt, "o_orderstatus = 'F'")
+    Pipeline.clonePublish(spark, srcTgt, "orders_snap", cloneTgt, "orders_clone")
+    publishOrders(spark, dir, srcTgt, "o_orderstatus = 'O'")
+    // the two generation reads are independent parquet scans: run them
+    // concurrently instead of as two serial jobs
+    graft.operators.ParJobs.run(spark, "graft clone gens", threads = 2)(Seq(
+        () => gen(spark, "clone_pinned",
+          Pipeline.resolvePublished(spark, cloneTgt, "orders_clone")),
+        () => gen(spark, "source_live",
+          Pipeline.resolvePublished(spark, srcTgt, "orders_snap"))))
+      .toDF("view_name", "n_rows", "n_keys", "min_key", "max_key")
+      .orderBy(col("view_name"))
   }
 
   /** H1j: VACUUM of a manifest-published target ([[Pipeline.vacuum]]):
@@ -303,47 +272,22 @@ object PipelineDemo {
   def runVacuum(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val target = Tables.scratch(spark, "graft_pipeline_vacuum")
-    def cfg(where: String) =
-      s"""{
-         |  "sources": [
-         |    {"name": "orders_snap", "path": "$dir/orders.parquet",
-         |     "where": "$where"}
-         |  ],
-         |  "load": {"target": "$target", "mode": "truncate"}
-         |}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Seq("'F'", "'O'", "'P'").foreach { st =>
-        Pipeline.run(spark,
-          PipelineCfg.fromJson(cfg(s"o_orderstatus = $st"))).collect(): Unit
-      }
-      // the crashed writer: a version dir with data but no manifest entry
-      graft.io.ParquetSchemas.read(spark, s"$dir/orders.parquet").filter(col("o_orderkey") < 40)
-        .write.mode("overwrite").parquet(s"$target/orders_snap/v_0_0_0")
-      val (kept, deleted) = Pipeline.vacuum(spark, target, "orders_snap")
-      def gen(label: String, paths: Seq[String]) = {
-        val r = spark.read.parquet(paths: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("o_orderkey")).as("n_keys"),
-            min(col("o_orderkey")).as("min_key"),
-            max(col("o_orderkey")).as("max_key")).head()
-        (label, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          kept.toLong, deleted.toLong)
-      }
-      Seq(gen("live", Pipeline.resolvePublished(spark, target, "orders_snap")),
-          gen("previous", Pipeline.resolvePrevGeneration(spark, target, "orders_snap")))
-        .toDF("generation", "n_rows", "n_keys", "min_key", "max_key",
-          "n_dirs_kept", "n_orphans_deleted")
-        .orderBy(col("generation"))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
+    Seq("'F'", "'O'", "'P'").foreach { st =>
+      publishOrders(spark, dir, target, s"o_orderstatus = $st")
     }
+    // the crashed writer: a version dir with data but no manifest entry
+    graft.io.ParquetSchemas.read(spark, s"$dir/orders.parquet").filter(col("o_orderkey") < 40)
+      .write.mode("overwrite").parquet(s"$target/orders_snap/v_0_0_0")
+    val (kept, deleted) = Pipeline.vacuum(spark, target, "orders_snap")
+    Seq(gen(spark, "live", Pipeline.resolvePublished(spark, target, "orders_snap")),
+        gen(spark, "previous", Pipeline.resolvePrevGeneration(spark, target, "orders_snap")))
+      .map { case (label, n, keys, lo, hi) =>
+        (label, n, keys, lo, hi, kept.toLong, deleted.toLong)
+      }
+      .toDF("generation", "n_rows", "n_keys", "min_key", "max_key",
+        "n_dirs_kept", "n_orphans_deleted")
+      .orderBy(col("generation"))
   }
-
   /** Config-listed WFS typename sweep (download_wfs.py:176
     * `download_wfs_service`: the config names N typed layers to pull from
     * one service; each stages as its own feature class). The typename
@@ -362,16 +306,6 @@ object PipelineDemo {
     Pipeline.run(spark, PipelineCfg.fromJson(json))
   }
 
-  /** H1l: BRANCHED PUBLISHING — the Nessie/Iceberg-branch flow over the
-    * manifest layout: a branch is one more tiny pointer file pinned to
-    * the generation it forked from; branch writes land as ordinary
-    * immutable version dirs but swing only the branch pointer (main
-    * readers never see them); merge is FAST-FORWARD ONLY — it succeeds
-    * exactly when main still is the recorded fork base, and a diverged
-    * main yields a refused "conflict" that changes nothing on either
-    * side. The demo drives the full life cycle: publish → branch →
-    * isolated branch write → clean merge → diverge → refused merge,
-    * reading main AND branch back through their pointers at each step. */
   /** H1m: RESTORE — rollback-as-a-forward-commit ([[Pipeline.restore]]).
     * Generation 1 ('F' orders) publishes, generation 2 ('O') supersedes
     * it, then restore swings the manifest BACK to the 'F' generation
@@ -382,42 +316,17 @@ object PipelineDemo {
   def runRestore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val target = Tables.scratch(spark, "graft_pipeline_restore")
-    def cfg(where: String) =
-      s"""{
-         |  "sources": [
-         |    {"name": "orders_snap", "path": "$dir/orders.parquet",
-         |     "where": "$where"}
-         |  ],
-         |  "load": {"target": "$target", "mode": "truncate"}
-         |}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderstatus = 'F'"))).collect()
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderstatus = 'O'"))).collect()
-      Pipeline.restore(spark, target, "orders_snap")
-      def gen(label: String, paths: Seq[String]) = {
-        val r = spark.read.parquet(paths: _*)
-          .agg(count(lit(1)).as("n_rows"),
-            countDistinct(col("o_orderkey")).as("n_keys"),
-            min(col("o_orderkey")).as("min_key"),
-            max(col("o_orderkey")).as("max_key")).head()
-        (label, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      }
-      val afterRestore = Seq(
-        gen("live_restored", Pipeline.resolvePublished(spark, target, "orders_snap")),
-        gen("superseded", Pipeline.resolvePrevGeneration(spark, target, "orders_snap")))
-      Pipeline.restore(spark, target, "orders_snap") // restore the restore
-      (afterRestore :+
-        gen("live_reverted", Pipeline.resolvePublished(spark, target, "orders_snap")))
-        .toDF("generation", "n_rows", "n_keys", "min_key", "max_key")
-        .orderBy(col("generation"))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
-    }
+    publishOrders(spark, dir, target, "o_orderstatus = 'F'")
+    publishOrders(spark, dir, target, "o_orderstatus = 'O'")
+    Pipeline.restore(spark, target, "orders_snap")
+    val afterRestore = Seq(
+      gen(spark, "live_restored", Pipeline.resolvePublished(spark, target, "orders_snap")),
+      gen(spark, "superseded", Pipeline.resolvePrevGeneration(spark, target, "orders_snap")))
+    Pipeline.restore(spark, target, "orders_snap") // restore the restore
+    (afterRestore :+
+      gen(spark, "live_reverted", Pipeline.resolvePublished(spark, target, "orders_snap")))
+      .toDF("generation", "n_rows", "n_keys", "min_key", "max_key")
+      .orderBy(col("generation"))
   }
 
   /** H1n: EXPIRE retained history ([[Pipeline.expirePrev]]) — the
@@ -429,40 +338,18 @@ object PipelineDemo {
   def runExpire(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val target = Tables.scratch(spark, "graft_pipeline_expire")
-    def cfg(where: String) =
-      s"""{
-         |  "sources": [
-         |    {"name": "orders_snap", "path": "$dir/orders.parquet",
-         |     "where": "$where"}
-         |  ],
-         |  "load": {"target": "$target", "mode": "truncate"}
-         |}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderstatus = 'F'"))).collect()
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderstatus = 'O'"))).collect()
-      val nExpired = Pipeline.expirePrev(spark, target, "orders_snap")
-      val prevLeft = Pipeline.resolvePrevGeneration(spark, target, "orders_snap")
-      val restoreRefused =
-        try { Pipeline.restore(spark, target, "orders_snap"); 0L }
-        catch { case _: IllegalArgumentException => 1L }
-      val live = Pipeline.resolvePublished(spark, target, "orders_snap")
-      val r = spark.read.parquet(live: _*)
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct(col("o_orderkey")).as("n_keys"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key")).head()
-      Seq(("live", r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        nExpired.toLong, prevLeft.size.toLong, restoreRefused))
-        .toDF("generation", "n_rows", "n_keys", "min_key", "max_key",
-          "n_expired", "prev_versions_left", "restore_refused")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
-    }
+    publishOrders(spark, dir, target, "o_orderstatus = 'F'")
+    publishOrders(spark, dir, target, "o_orderstatus = 'O'")
+    val nExpired = Pipeline.expirePrev(spark, target, "orders_snap")
+    val prevLeft = Pipeline.resolvePrevGeneration(spark, target, "orders_snap")
+    val restoreRefused =
+      try { Pipeline.restore(spark, target, "orders_snap"); 0L }
+      catch { case _: IllegalArgumentException => 1L }
+    val (label, n, keys, lo, hi) =
+      gen(spark, "live", Pipeline.resolvePublished(spark, target, "orders_snap"))
+    Seq((label, n, keys, lo, hi, nExpired.toLong, prevLeft.size.toLong, restoreRefused))
+      .toDF("generation", "n_rows", "n_keys", "min_key", "max_key",
+        "n_expired", "prev_versions_left", "restore_refused")
   }
 
   /** H1o: snapshot DIFF ([[Pipeline.diffGenerations]]) — two truncate
@@ -477,46 +364,29 @@ object PipelineDemo {
   def runDiff(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val target = Tables.scratch(spark, "graft_pipeline_diff")
-    def cfg(where: String) =
-      s"""{
-         |  "sources": [
-         |    {"name": "orders_snap", "path": "$dir/orders.parquet",
-         |     "where": "$where"}
-         |  ],
-         |  "load": {"target": "$target", "mode": "truncate"}
-         |}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderkey % 3 < 2"))).collect()
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderkey % 3 > 0"))).collect()
-      val (addedV, removedV, keptV) =
-        Pipeline.diffGenerations(spark, target, "orders_snap")
-      val live = spark.read.parquet(
-        Pipeline.resolvePublished(spark, target, "orders_snap"): _*)
-      val prev = spark.read.parquet(
-        Pipeline.resolvePrevGeneration(spark, target, "orders_snap"): _*)
-      def stats(label: String, nVer: Long, rows: DataFrame) = {
-        val r = rows.agg(countDistinct(col("o_orderkey")).as("n_keys"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key")).head()
-        (label, nVer, r.getLong(0), r.getLong(1), r.getLong(2))
-      }
-      Seq(
-        stats("added", addedV.size.toLong,
-          live.join(prev, Seq("o_orderkey"), "left_anti")),
-        stats("removed", removedV.size.toLong,
-          prev.join(live, Seq("o_orderkey"), "left_anti")),
-        stats("unchanged", keptV.size.toLong,
-          live.join(prev, Seq("o_orderkey"), "left_semi")))
-        .toDF("change", "n_versions", "n_keys", "min_key", "max_key")
-        .orderBy(col("change"))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
+    publishOrders(spark, dir, target, "o_orderkey % 3 < 2")
+    publishOrders(spark, dir, target, "o_orderkey % 3 > 0")
+    val (addedV, removedV, keptV) =
+      Pipeline.diffGenerations(spark, target, "orders_snap")
+    val live = spark.read.parquet(
+      Pipeline.resolvePublished(spark, target, "orders_snap"): _*)
+    val prev = spark.read.parquet(
+      Pipeline.resolvePrevGeneration(spark, target, "orders_snap"): _*)
+    def stats(label: String, nVer: Long, rows: DataFrame) = {
+      val r = rows.agg(countDistinct(col("o_orderkey")).as("n_keys"),
+        min(col("o_orderkey")).as("min_key"),
+        max(col("o_orderkey")).as("max_key")).head()
+      (label, nVer, r.getLong(0), r.getLong(1), r.getLong(2))
     }
+    Seq(
+      stats("added", addedV.size.toLong,
+        live.join(prev, Seq("o_orderkey"), "left_anti")),
+      stats("removed", removedV.size.toLong,
+        prev.join(live, Seq("o_orderkey"), "left_anti")),
+      stats("unchanged", keptV.size.toLong,
+        live.join(prev, Seq("o_orderkey"), "left_semi")))
+      .toDF("change", "n_versions", "n_keys", "min_key", "max_key")
+      .orderBy(col("change"))
   }
 
   /** H1p: INCREMENTAL READ ([[Pipeline.readIncremental]]) — three
@@ -529,40 +399,35 @@ object PipelineDemo {
   def runIncremental(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val target = Tables.scratch(spark, "graft_pipeline_incr")
-    def cfg(where: String) =
-      s"""{
-         |  "sources": [
-         |    {"name": "orders_inc", "path": "$dir/orders.parquet",
-         |     "where": "$where"}
-         |  ],
-         |  "load": {"target": "$target", "mode": "append"}
-         |}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      def consume(call: Long, seenBefore: Long): (Long, Long, Long, Long) = {
-        val fresh = Pipeline.readIncremental(spark, target, "orders_inc", "c1")
-        val n = if (fresh.isEmpty) 0L
-          else spark.read.parquet(fresh: _*).count()
-        (call, fresh.size.toLong, n, seenBefore + n)
-      }
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderkey % 4 = 0"))).collect()
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderkey % 4 = 1"))).collect()
-      val c1 = consume(1L, 0L)
-      Pipeline.run(spark, PipelineCfg.fromJson(cfg("o_orderkey % 4 = 2"))).collect()
-      val c2 = consume(2L, c1._4)
-      val c3 = consume(3L, c2._4)
-      Seq(c1, c2, c3)
-        .toDF("call", "n_new_versions", "n_new_rows", "n_rows_seen_total")
-        .orderBy(col("call"))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
+    def publish(where: String): Unit =
+      publishOrders(spark, dir, target, where, name = "orders_inc", mode = "append")
+    def consume(call: Long, seenBefore: Long): (Long, Long, Long, Long) = {
+      val fresh = Pipeline.readIncremental(spark, target, "orders_inc", "c1")
+      val n = if (fresh.isEmpty) 0L
+        else spark.read.parquet(fresh: _*).count()
+      (call, fresh.size.toLong, n, seenBefore + n)
     }
+    publish("o_orderkey % 4 = 0")
+    publish("o_orderkey % 4 = 1")
+    val c1 = consume(1L, 0L)
+    publish("o_orderkey % 4 = 2")
+    val c2 = consume(2L, c1._4)
+    val c3 = consume(3L, c2._4)
+    Seq(c1, c2, c3)
+      .toDF("call", "n_new_versions", "n_new_rows", "n_rows_seen_total")
+      .orderBy(col("call"))
   }
 
+  /** H1l: BRANCHED PUBLISHING — the Nessie/Iceberg-branch flow over the
+    * manifest layout: a branch is one more tiny pointer file pinned to
+    * the generation it forked from; branch writes land as ordinary
+    * immutable version dirs but swing only the branch pointer (main
+    * readers never see them); merge is FAST-FORWARD ONLY — it succeeds
+    * exactly when main still is the recorded fork base, and a diverged
+    * main yields a refused "conflict" that changes nothing on either
+    * side. The demo drives the full life cycle: publish → branch →
+    * isolated branch write → clean merge → diverge → refused merge,
+    * reading main AND branch back through their pointers at each step. */
   def runBranch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.hadoop.fs.Path

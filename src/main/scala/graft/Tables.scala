@@ -79,14 +79,9 @@ final case class Tables(spark: SparkSession, dir: String) {
     * vector math, fingerprinting), spread the rows across the cluster
     * first; the shuffle is tiny next to the compute it parallelizes. (On a
     * layout with many splits the scan itself provides them and this is a
-    * no-op cost-wise.) Conf-gated (`graft.spread.documents`, default on) so
-    * the exchange's cost is measurable with one flag flip — it was the
-    * prime suspect for the r8 text-family bench drift, and a deployment on
-    * a well-split layout would turn it off. */
+    * no-op cost-wise.) */
   private def spread(df: DataFrame): DataFrame =
-    if (spark.conf.get("graft.spread.documents", "true").toBoolean)
-      df.repartition(spark.sparkContext.defaultParallelism)
-    else df
+    df.repartition(spark.sparkContext.defaultParallelism)
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")

@@ -82,9 +82,28 @@ case class GeoOverrideCfg(
   * `Underlag_{AUTHORITY}` feature dataset — created if absent, with
   * fallback to the target ROOT when creation fails — and the destination
   * name drops the authority prefix and any file extension. Off (default),
-  * destinations keep flat `target/<sanitized-source-name>` naming. */
+  * destinations keep flat `target/<sanitized-source-name>` naming.
+  *
+  * `publish` picks how a load commits. `rename` (default) stages next to
+  * the destination and renames it into place: atomic and instant on HDFS.
+  * `manifest` never moves data: each load writes a NEW immutable version
+  * directory and then rewrites one tiny manifest object LAST, so the
+  * commit is one small PUT at any data size. On S3-like stores, where a
+  * directory rename is an O(data) copy, use `manifest`. It is a field of
+  * the document, not a session setting, so one run's choice cannot leak
+  * into another run on the same session. */
 case class LoadCfg(target: String, mode: String = "truncate", // truncate | append
-    resolveDatasets: Boolean = false)
+    resolveDatasets: Boolean = false,
+    publish: String = "rename") { // rename | manifest
+
+  /** True for manifest publish; any value but `rename`/`manifest` throws. */
+  def manifestPublish: Boolean = publish match {
+    case "manifest" => true
+    case "rename"   => false
+    case other => throw new IllegalArgumentException(
+      s"load.publish=$other (expected rename|manifest)")
+  }
+}
 
 /** Step gating — run.py's `--download --process --load_sde` flags: any
   * stage can be toggled per run. */
@@ -379,21 +398,6 @@ object Pipeline {
       fs.makeQualified(resolved.getOrElse(new Path(target, clean)))
     }
   }
-
-  /** True when the session publishes through manifests instead of
-    * directory renames (`graft.publish.mode` = `manifest`; default
-    * `rename`). Rename publish is ideal on HDFS (atomic, instant) but on
-    * S3-like stores a directory rename is an O(data) copy; manifest
-    * publish never moves data — each load writes a NEW immutable version
-    * directory and then rewrites one tiny manifest object LAST, so the
-    * commit cost is one small PUT regardless of data size. */
-  def manifestMode(spark: SparkSession): Boolean =
-    spark.conf.get("graft.publish.mode", "rename") match {
-      case "manifest" => true
-      case "rename"   => false
-      case other => throw new IllegalArgumentException(
-        s"graft.publish.mode=$other (expected rename|manifest)")
-    }
 
   private val verSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -724,15 +728,17 @@ object Pipeline {
     * TARGET's scheme — the same abstraction the writes use — so the
     * write-once-then-reconcile publish works unchanged on HDFS or any
     * Hadoop-FS-backed store, not just the local FS. On object stores
-    * without atomic rename — S3 — set `graft.publish.mode=manifest`
-    * ([[manifestMode]]): data lands once in an immutable version
-    * directory and the commit is one tiny manifest PUT, no rename. */
+    * without atomic rename — S3 — set the load's `publish` to `manifest`
+    * ([[LoadCfg]]): data lands once in an immutable version directory
+    * and the commit is one tiny manifest PUT, no rename. */
   def run(spark: SparkSession, cfg0: PipelineCfg): DataFrame = {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
     // fold the active environment's overlay in first (idempotent; a typo'd
     // environment name fails here, before anything is staged or deleted)
     val cfg = cfg0.resolveEnvironment()
+    // a bad publish value fails here too, before cleanup deletes the target
+    val manifestPublish = cfg.load.exists(_.manifestPublish)
     val hconf = spark.sparkContext.hadoopConfiguration
     if (cfg.cleanupBeforeRun) cfg.load.foreach { l =>
       val p = new Path(l.target)
@@ -762,7 +768,7 @@ object Pipeline {
         df.groupBy(col("layer_name")).count().collect()
           .map(r => (s"${src.name}/${r.getString(0)}", r.getLong(1))).toSeq
       cfg.load match {
-        case Some(LoadCfg(target, mode, resolveDatasets)) if cfg.steps.load =>
+        case Some(LoadCfg(target, mode, resolveDatasets, _)) if cfg.steps.load =>
           val fs = new Path(target).getFileSystem(hconf)
           val dst = resolveDestination(fs, new Path(target), src.name, resolveDatasets)
           val appendMode = mode == "append"
@@ -783,7 +789,7 @@ object Pipeline {
             }
             buf.toSeq
           }
-          if (manifestMode(spark)) {
+          if (manifestPublish) {
             // Manifest-commit publish (the S3-safe mode): the load writes
             // ONCE into a fresh immutable version directory under the
             // target — data never renames (on S3 a rename is an O(data)

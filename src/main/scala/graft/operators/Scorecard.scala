@@ -160,10 +160,6 @@ object Scorecard {
       .select(lit(gate).as("gate"), col("n_rows"), col("sum_hash"),
         col("xor_hash"))
 
-  /** dev hook for graft.tools.GateProfile */
-  private[graft] def profileFrames(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
-    buildFrames(spark, dir)
-
   /** The frame each gate's completed stream is pinned to emit, computed
     * through the shared batch cores (see the object scaladoc); the gates
     * without a one-call batch operator replay their own oracle's batch
@@ -171,7 +167,7 @@ object Scorecard {
     * eager driver-side phases by design (the bloom build, the staleness
     * watermark head() reads, the breaker/changelog fold setup), and
     * built inline those serialized into a ~7.5 s prefix before any
-    * digest ran (profiled via GateProfile) — the scoreboard therefore
+    * digest ran — the scoreboard therefore
     * materializes the thunks CONCURRENTLY (construction is independent
     * per gate; concurrent actions on one SparkSession are supported). */
   private def frames(spark: SparkSession, dir: String): Seq[(String, () => DataFrame)] = {
@@ -184,11 +180,8 @@ object Scorecard {
     // Materialized ONCE — the three independent collapses in parallel,
     // the Holt trajectory (which folds the daily cells) after its
     // input — so the per-gate digest jobs read run-log-/support-sized
-    // cached cells instead of re-scanning the corpus per job. (In the
-    // old single-union shape ReuseExchange already deduped these, which
-    // is why checkpointing alone changed nothing at r14's 11.8 s; with
-    // per-gate JOBS the explicit materialization is what prevents the
-    // recompute.)
+    // cached cells instead of re-scanning the corpus per job (separate
+    // jobs share no exchange, so nothing else prevents the recompute).
     val Seq(daily, posCells, psiCells) = parMaterialize(spark, Seq(
       () => LoadOps.dailyMd(spark, dir),
       () => ev.select(col("event_type").as("source"),
@@ -347,50 +340,18 @@ object Scorecard {
 
   private val ParTimeout = scala.concurrent.duration.Duration(30, "minutes")
 
-  private def buildFrames(spark: SparkSession,
-      dir: String): Seq[(String, DataFrame)] = {
-    val fs = frames(spark, dir)
-    fs.map(_._1).zip(parRun(spark)(fs.map(_._2)))
-  }
-
   def streamScorecard(spark: SparkSession, dir: String): DataFrame = {
     val specs = gateCols.toMap
-    // digest collection shape, conf-switchable for A/B
-    // (`graft.scorecard.union`): ONE union job hands all 37 digest
-    // stages to the DAG scheduler at once (no 8-thread pool cap, one
-    // submission round-trip) vs one collect job per gate on the pool.
-    // MEASURED r16 (4 alternating isolated pairs at sf0.1): minima 8.7 s
-    // union vs 8.1 s concurrent — equivalent within box noise, because
-    // the entry is COMPUTE-bound, not protocol-bound (GateProfile: the
-    // 37 digests sum to 24.3 s of real frame compute, frames-build
-    // 3.0 s; 8 threads over 24.3 s ≈ the observed wall). The r14
-    // verdict's "batch into fewer actions → ≤7 s" hypothesis is
-    // thereby answered: the floor is the gates' own batch compute, and
-    // shaving it means making individual gate FRAMES cheaper, not
-    // scheduling. Default stays the proven concurrent shape (which also
-    // carries the job-group failure containment); the union path stays
-    // conf-keyed for re-measurement. The driver holds one 4-field row
-    // per gate either way — constant-size.
-    if (spark.conf.get("graft.scorecard.union", "false").toBoolean) {
-      buildFrames(spark, dir)
-        .map { case (g, df) => digestOf(g, df, specs(g)) }
-        .reduce(_.unionByName(_))
-        .orderBy(col("gate"))
-    } else {
-      // FUSED per-gate pipeline (r17): frame construction and digest
-      // collect run as ONE thunk per gate on the pool, so early gates
-      // digest while late gates still build — the r16 shape barriered
-      // ALL 37 frame builds (3.5 s parallel wall) before the first
-      // digest job could start, and that barrier bought nothing (no
-      // digest reads another gate's frame; the genuinely shared inputs
-      // are the pre-materialized collapses inside frames()).
-      val rows = parRun(spark)(frames(spark, dir).map { case (g, mk) => () =>
-        val r = digestOf(g, mk(), specs(g)).collect()(0)
-        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      })
-      spark.createDataFrame(rows)
-        .toDF("gate", "n_rows", "sum_hash", "xor_hash")
-        .orderBy(col("gate"))
-    }
+    // one thunk per gate on the pool builds the gate's frame and collects
+    // its digest, so early gates digest while late gates still build: no
+    // digest reads another gate's frame (the shared inputs are the
+    // collapses frames() materializes up front)
+    val rows = parRun(spark)(frames(spark, dir).map { case (g, mk) => () =>
+      val r = digestOf(g, mk(), specs(g)).collect()(0)
+      (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    })
+    spark.createDataFrame(rows)
+      .toDF("gate", "n_rows", "sum_hash", "xor_hash")
+      .orderBy(col("gate"))
   }
 }

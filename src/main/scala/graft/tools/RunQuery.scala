@@ -3,17 +3,20 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Dev CLI: run the flagship entry or any registered query against an sf
-  * dir and print rows + the formatted physical plan.
+  * dir and print rows + the formatted physical plan. `--time` then runs
+  * the query three times to a noop write of its whole result (the action
+  * the benchmark times) and prints each run and the minimum.
   *
-  * Usage: runMain graft.tools.RunQuery [entry|<query-name>] [sfDir] [--plan]
+  * Usage: runMain graft.tools.RunQuery [entry|<query-name>] [sfDir] [--plan] [--time]
   */
 object RunQuery {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("entry")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -30,10 +33,15 @@ object RunQuery {
     if (args.contains("--plan")) println(df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))
     println(s"ROWS=${df.count()}")
-    if (args.contains("--time")) (1 to 3).foreach { i =>
-      val t0 = System.nanoTime()
-      df.count()
-      println(f"RUN$i=${(System.nanoTime() - t0) / 1e9}%.2fs")
+    if (args.contains("--time")) {
+      val runs = (1 to 3).map { i =>
+        val t0 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val s = (System.nanoTime() - t0) / 1e9
+        println(f"RUN$i=$s%.2fs")
+        s
+      }
+      println(f"MIN=${runs.min}%.2fs")
     }
     df.show(10, truncate = false)
     spark.stop()

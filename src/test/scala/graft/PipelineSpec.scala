@@ -79,6 +79,21 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(new java.io.File(s"$target/nation").exists())
   }
 
+  test("an unknown publish value fails before cleanup deletes the target") {
+    val tgt = s"$target/bad_publish"
+    val kept = new java.io.File(s"$tgt/earlier_load")
+    kept.mkdirs()
+    val json =
+      s"""{"sources": [{"name": "nation", "path": "$sfDir/nation.parquet"}],
+         | "load": {"target": "$tgt", "publish": "s3"},
+         | "cleanupBeforeRun": true}""".stripMargin
+    val e = intercept[IllegalArgumentException] {
+      Pipeline.run(spark, PipelineCfg.fromJson(json))
+    }
+    assert(e.getMessage.contains("s3"), e.getMessage)
+    assert(kept.exists(), "a rejected document must leave the target as it was")
+  }
+
   test("geoprocess inheritance: sources inherit, override, and disable the global AOI") {
     // global policy clips supplier coords to a box; source A inherits it,
     // source B overrides the AOI (wider box), source C disables clipping —
@@ -185,159 +200,148 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("manifest-commit publish: versioned data, manifest-resolved reads, grace GC, append accumulates") {
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      val tgt = s"$target/manifest_load"
-      val cfg = PipelineCfg(
-        sources = Seq(SourceCfg(name = "orders_f", path = s"$sfDir/orders.parquet",
-          where = Some("o_orderstatus = 'F'"))),
-        load = Some(LoadCfg(tgt)), cleanupBeforeRun = true)
-      val truth = spark.read.parquet(s"$sfDir/orders.parquet")
-        .filter("o_orderstatus = 'F'").count()
-      val out1 = Pipeline.run(spark, cfg).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(out1 == Map("orders_f" -> truth), out1.toString)
-      // a reader resolves the live version through the manifest
-      val live1 = Pipeline.resolvePublished(spark, tgt, "orders_f")
-      assert(live1.size == 1, live1.toString)
-      assert(spark.read.parquet(live1: _*).count() == truth)
-      // second truncate run: the manifest swings to ONE new version; the
-      // superseded version survives one generation (reader grace)
-      Pipeline.run(spark, cfg.copy(cleanupBeforeRun = false)).collect()
-      val live2 = Pipeline.resolvePublished(spark, tgt, "orders_f")
-      assert(live2.size == 1 && live2 != live1, s"$live1 vs $live2")
-      def versionsOnDisk() = new java.io.File(s"$tgt/orders_f")
-        .listFiles().filter(_.getName.startsWith("v_")).map(_.getName).toSet
-      val v1 = new java.io.File(live1.head).getName
-      assert(versionsOnDisk().contains(v1), "grace version was GC'd too early")
-      // third run: the first version is two generations old — GC'd
-      Pipeline.run(spark, cfg.copy(cleanupBeforeRun = false)).collect()
-      assert(!versionsOnDisk().contains(v1), "two-generations-old version survived GC")
-      assert(spark.read.parquet(
-        Pipeline.resolvePublished(spark, tgt, "orders_f"): _*).count() == truth)
-      // append mode: each run adds a version, the manifest lists them all,
-      // and both the run reconcile and a manifest reader count every append
-      val appTgt = s"$target/manifest_append"
-      val appCfg = PipelineCfg(
-        sources = Seq(SourceCfg(name = "orders_app", path = s"$sfDir/orders.parquet",
-          where = Some("o_orderstatus = 'F'"))),
-        load = Some(LoadCfg(appTgt, "append")), cleanupBeforeRun = true)
-      Pipeline.run(spark, appCfg).collect()
-      val out2 = Pipeline.run(spark, appCfg.copy(cleanupBeforeRun = false)).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(out2 == Map("orders_app" -> truth * 2), out2.toString)
-      val liveApp = Pipeline.resolvePublished(spark, appTgt, "orders_app")
-      assert(liveApp.size == 2, liveApp.toString)
-      assert(spark.read.parquet(liveApp: _*).count() == truth * 2)
-    } finally spark.conf.unset("graft.publish.mode")
+    val tgt = s"$target/manifest_load"
+    val cfg = PipelineCfg(
+      sources = Seq(SourceCfg(name = "orders_f", path = s"$sfDir/orders.parquet",
+        where = Some("o_orderstatus = 'F'"))),
+      load = Some(LoadCfg(tgt, publish = "manifest")), cleanupBeforeRun = true)
+    val truth = spark.read.parquet(s"$sfDir/orders.parquet")
+      .filter("o_orderstatus = 'F'").count()
+    val out1 = Pipeline.run(spark, cfg).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(out1 == Map("orders_f" -> truth), out1.toString)
+    // a reader resolves the live version through the manifest
+    val live1 = Pipeline.resolvePublished(spark, tgt, "orders_f")
+    assert(live1.size == 1, live1.toString)
+    assert(spark.read.parquet(live1: _*).count() == truth)
+    // second truncate run: the manifest swings to ONE new version; the
+    // superseded version survives one generation (reader grace)
+    Pipeline.run(spark, cfg.copy(cleanupBeforeRun = false)).collect()
+    val live2 = Pipeline.resolvePublished(spark, tgt, "orders_f")
+    assert(live2.size == 1 && live2 != live1, s"$live1 vs $live2")
+    def versionsOnDisk() = new java.io.File(s"$tgt/orders_f")
+      .listFiles().filter(_.getName.startsWith("v_")).map(_.getName).toSet
+    val v1 = new java.io.File(live1.head).getName
+    assert(versionsOnDisk().contains(v1), "grace version was GC'd too early")
+    // third run: the first version is two generations old — GC'd
+    Pipeline.run(spark, cfg.copy(cleanupBeforeRun = false)).collect()
+    assert(!versionsOnDisk().contains(v1), "two-generations-old version survived GC")
+    assert(spark.read.parquet(
+      Pipeline.resolvePublished(spark, tgt, "orders_f"): _*).count() == truth)
+    // append mode: each run adds a version, the manifest lists them all,
+    // and both the run reconcile and a manifest reader count every append
+    val appTgt = s"$target/manifest_append"
+    val appCfg = PipelineCfg(
+      sources = Seq(SourceCfg(name = "orders_app", path = s"$sfDir/orders.parquet",
+        where = Some("o_orderstatus = 'F'"))),
+      load = Some(LoadCfg(appTgt, "append", publish = "manifest")), cleanupBeforeRun = true)
+    Pipeline.run(spark, appCfg).collect()
+    val out2 = Pipeline.run(spark, appCfg.copy(cleanupBeforeRun = false)).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(out2 == Map("orders_app" -> truth * 2), out2.toString)
+    val liveApp = Pipeline.resolvePublished(spark, appTgt, "orders_app")
+    assert(liveApp.size == 2, liveApp.toString)
+    assert(spark.read.parquet(liveApp: _*).count() == truth * 2)
   }
 
   test("time travel resolves the superseded generation's exact content, empty before it exists") {
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      val tgt = s"$target/travel_load"
-      def cfg(where: String, cleanup: Boolean) = PipelineCfg(
-        sources = Seq(SourceCfg(name = "orders_tt", path = s"$sfDir/orders.parquet",
-          where = Some(where))),
-        load = Some(LoadCfg(tgt)), cleanupBeforeRun = cleanup)
-      Pipeline.run(spark, cfg("o_orderstatus = 'F'", cleanup = true)).collect()
-      // one committed generation: nothing to travel back to
-      assert(Pipeline.resolvePrevGeneration(spark, tgt, "orders_tt").isEmpty)
-      Pipeline.run(spark, cfg("o_orderstatus = 'O'", cleanup = false)).collect()
-      // the live generation is 'O'; the ledger still serves 'F' exactly
-      val truthF = spark.read.parquet(s"$sfDir/orders.parquet")
-        .filter("o_orderstatus = 'F'").count()
-      val prev = Pipeline.resolvePrevGeneration(spark, tgt, "orders_tt")
-      assert(prev.nonEmpty)
-      val prevDf = spark.read.parquet(prev: _*)
-      assert(prevDf.count() == truthF)
-      assert(prevDf.filter("o_orderstatus <> 'F'").isEmpty,
-        "time-traveled generation leaked rows from the live one")
-    } finally spark.conf.unset("graft.publish.mode")
+    val tgt = s"$target/travel_load"
+    def cfg(where: String, cleanup: Boolean) = PipelineCfg(
+      sources = Seq(SourceCfg(name = "orders_tt", path = s"$sfDir/orders.parquet",
+        where = Some(where))),
+      load = Some(LoadCfg(tgt, publish = "manifest")), cleanupBeforeRun = cleanup)
+    Pipeline.run(spark, cfg("o_orderstatus = 'F'", cleanup = true)).collect()
+    // one committed generation: nothing to travel back to
+    assert(Pipeline.resolvePrevGeneration(spark, tgt, "orders_tt").isEmpty)
+    Pipeline.run(spark, cfg("o_orderstatus = 'O'", cleanup = false)).collect()
+    // the live generation is 'O'; the ledger still serves 'F' exactly
+    val truthF = spark.read.parquet(s"$sfDir/orders.parquet")
+      .filter("o_orderstatus = 'F'").count()
+    val prev = Pipeline.resolvePrevGeneration(spark, tgt, "orders_tt")
+    assert(prev.nonEmpty)
+    val prevDf = spark.read.parquet(prev: _*)
+    assert(prevDf.count() == truthF)
+    assert(prevDf.filter("o_orderstatus <> 'F'").isEmpty,
+      "time-traveled generation leaked rows from the live one")
   }
 
   test("shallow clone moves zero data, pins one source republish, dangles after two (the contract)") {
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      val srcTgt = s"$target/clone_src"
-      val cloneTgt = s"$target/clone_dst"
-      def cfg(where: String, cleanup: Boolean) = PipelineCfg(
-        sources = Seq(SourceCfg(name = "orders_c", path = s"$sfDir/orders.parquet",
-          where = Some(where))),
-        load = Some(LoadCfg(srcTgt)), cleanupBeforeRun = cleanup)
-      // cloning an unpublished target is a hard error
-      intercept[IllegalArgumentException] {
-        Pipeline.clonePublish(spark, s"$target/clone_missing", "x", cloneTgt, "x")
-      }
-      Pipeline.run(spark, cfg("o_orderstatus = 'F'", cleanup = true)).collect()
-      val n = Pipeline.clonePublish(spark, srcTgt, "orders_c", cloneTgt, "orders_clone")
-      assert(n == 1)
-      // zero-copy: nothing under the clone but the one manifest object
-      def filesUnder(d: java.io.File): Seq[java.io.File] =
-        Option(d.listFiles()).toSeq.flatten
-          .flatMap(f => if (f.isDirectory) filesUnder(f) else Seq(f))
-      // (the local FS adds a .crc sidecar per object; the claim is "no
-      // data files", i.e. nothing but the manifest object and its crc)
-      val cloneFiles = filesUnder(new java.io.File(cloneTgt)).map(_.getName)
-        .filterNot(_.endsWith(".crc"))
-      assert(cloneFiles == Seq("_GRAFT_MANIFEST"), cloneFiles.toString)
-      // every manifest line resolves INSIDE the source target
-      val resolved = Pipeline.resolvePublished(spark, cloneTgt, "orders_clone")
-      assert(resolved.nonEmpty &&
-        resolved.forall(_.contains("clone_src")), resolved.toString)
-      val truthF = spark.read.parquet(s"$sfDir/orders.parquet")
-        .filter("o_orderstatus = 'F'").count()
-      assert(spark.read.parquet(resolved: _*).count() == truthF)
-      // source republish #1: clone still serves the pinned 'F' snapshot
-      Pipeline.run(spark, cfg("o_orderstatus = 'O'", cleanup = false)).collect()
-      val pinned = spark.read.parquet(
-        Pipeline.resolvePublished(spark, cloneTgt, "orders_clone"): _*)
-      assert(pinned.count() == truthF)
-      assert(pinned.filter("o_orderstatus <> 'F'").isEmpty,
-        "clone leaked rows from the source's new generation")
-      // source republish #2: the captured generation leaves the grace
-      // window and is GC'd — the clone now dangles (deep-copy territory)
-      Pipeline.run(spark, cfg("o_orderstatus = 'P'", cleanup = false)).collect()
-      val dangling = Pipeline.resolvePublished(spark, cloneTgt, "orders_clone")
-      assert(!dangling.forall(p => new java.io.File(
-        new java.net.URI(p).getPath).exists()),
-        "two-republish-old cloned generation unexpectedly survived GC")
-    } finally spark.conf.unset("graft.publish.mode")
+    val srcTgt = s"$target/clone_src"
+    val cloneTgt = s"$target/clone_dst"
+    def cfg(where: String, cleanup: Boolean) = PipelineCfg(
+      sources = Seq(SourceCfg(name = "orders_c", path = s"$sfDir/orders.parquet",
+        where = Some(where))),
+      load = Some(LoadCfg(srcTgt, publish = "manifest")), cleanupBeforeRun = cleanup)
+    // cloning an unpublished target is a hard error
+    intercept[IllegalArgumentException] {
+      Pipeline.clonePublish(spark, s"$target/clone_missing", "x", cloneTgt, "x")
+    }
+    Pipeline.run(spark, cfg("o_orderstatus = 'F'", cleanup = true)).collect()
+    val n = Pipeline.clonePublish(spark, srcTgt, "orders_c", cloneTgt, "orders_clone")
+    assert(n == 1)
+    // zero-copy: nothing under the clone but the one manifest object
+    def filesUnder(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten
+        .flatMap(f => if (f.isDirectory) filesUnder(f) else Seq(f))
+    // (the local FS adds a .crc sidecar per object; the claim is "no
+    // data files", i.e. nothing but the manifest object and its crc)
+    val cloneFiles = filesUnder(new java.io.File(cloneTgt)).map(_.getName)
+      .filterNot(_.endsWith(".crc"))
+    assert(cloneFiles == Seq("_GRAFT_MANIFEST"), cloneFiles.toString)
+    // every manifest line resolves INSIDE the source target
+    val resolved = Pipeline.resolvePublished(spark, cloneTgt, "orders_clone")
+    assert(resolved.nonEmpty &&
+      resolved.forall(_.contains("clone_src")), resolved.toString)
+    val truthF = spark.read.parquet(s"$sfDir/orders.parquet")
+      .filter("o_orderstatus = 'F'").count()
+    assert(spark.read.parquet(resolved: _*).count() == truthF)
+    // source republish #1: clone still serves the pinned 'F' snapshot
+    Pipeline.run(spark, cfg("o_orderstatus = 'O'", cleanup = false)).collect()
+    val pinned = spark.read.parquet(
+      Pipeline.resolvePublished(spark, cloneTgt, "orders_clone"): _*)
+    assert(pinned.count() == truthF)
+    assert(pinned.filter("o_orderstatus <> 'F'").isEmpty,
+      "clone leaked rows from the source's new generation")
+    // source republish #2: the captured generation leaves the grace
+    // window and is GC'd — the clone now dangles (deep-copy territory)
+    Pipeline.run(spark, cfg("o_orderstatus = 'P'", cleanup = false)).collect()
+    val dangling = Pipeline.resolvePublished(spark, cloneTgt, "orders_clone")
+    assert(!dangling.forall(p => new java.io.File(
+      new java.net.URI(p).getPath).exists()),
+      "two-republish-old cloned generation unexpectedly survived GC")
   }
 
   test("manifest GC grace covers a whole multi-version prior generation and spares foreign dirs") {
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      val tgt = s"$target/manifest_grace"
-      val app = PipelineCfg(
-        sources = Seq(SourceCfg(name = "g", path = s"$sfDir/region.parquet")),
-        load = Some(LoadCfg(tgt, "append")), cleanupBeforeRun = true)
-      Pipeline.run(spark, app).collect()
-      Pipeline.run(spark, app.copy(cleanupBeforeRun = false)).collect()
-      val appended = Pipeline.resolvePublished(spark, tgt, "g")
-      assert(appended.size == 2)
-      // a concurrent writer's in-flight (never-published) version dir
-      val foreign = new java.io.File(s"$tgt/g/v_9999999999999_1_1")
-      foreign.mkdirs()
-      // truncate over the two-version generation: BOTH prior versions
-      // must survive this publish (a reader resolving [v1, v2] may be
-      // mid-scan of either), and the foreign dir must not be swept
-      val trunc = app.copy(load = Some(LoadCfg(tgt, "truncate")), cleanupBeforeRun = false)
-      Pipeline.run(spark, trunc).collect()
-      val disk1 = new java.io.File(s"$tgt/g").listFiles()
-        .filter(_.getName.startsWith("v_")).map(_.getName).toSet
-      appended.map(p => new java.io.File(p).getName).foreach(v =>
-        assert(disk1.contains(v), s"prior-generation version $v GC'd without grace"))
-      assert(disk1.contains(foreign.getName), "foreign in-flight dir was swept")
-      // one more truncate: the old generation is now two publishes old
-      // and goes away; the foreign dir STILL survives (never in a ledger)
-      Pipeline.run(spark, trunc).collect()
-      val disk2 = new java.io.File(s"$tgt/g").listFiles()
-        .filter(_.getName.startsWith("v_")).map(_.getName).toSet
-      appended.map(p => new java.io.File(p).getName).foreach(v =>
-        assert(!disk2.contains(v), s"two-generations-old version $v survived GC"))
-      assert(disk2.contains(foreign.getName), "foreign dir swept by ledger GC")
-    } finally spark.conf.unset("graft.publish.mode")
+    val tgt = s"$target/manifest_grace"
+    val app = PipelineCfg(
+      sources = Seq(SourceCfg(name = "g", path = s"$sfDir/region.parquet")),
+      load = Some(LoadCfg(tgt, "append", publish = "manifest")), cleanupBeforeRun = true)
+    Pipeline.run(spark, app).collect()
+    Pipeline.run(spark, app.copy(cleanupBeforeRun = false)).collect()
+    val appended = Pipeline.resolvePublished(spark, tgt, "g")
+    assert(appended.size == 2)
+    // a concurrent writer's in-flight (never-published) version dir
+    val foreign = new java.io.File(s"$tgt/g/v_9999999999999_1_1")
+    foreign.mkdirs()
+    // truncate over the two-version generation: BOTH prior versions
+    // must survive this publish (a reader resolving [v1, v2] may be
+    // mid-scan of either), and the foreign dir must not be swept
+    val trunc = app.copy(load = Some(LoadCfg(tgt, "truncate", publish = "manifest")),
+      cleanupBeforeRun = false)
+    Pipeline.run(spark, trunc).collect()
+    val disk1 = new java.io.File(s"$tgt/g").listFiles()
+      .filter(_.getName.startsWith("v_")).map(_.getName).toSet
+    appended.map(p => new java.io.File(p).getName).foreach(v =>
+      assert(disk1.contains(v), s"prior-generation version $v GC'd without grace"))
+    assert(disk1.contains(foreign.getName), "foreign in-flight dir was swept")
+    // one more truncate: the old generation is now two publishes old
+    // and goes away; the foreign dir STILL survives (never in a ledger)
+    Pipeline.run(spark, trunc).collect()
+    val disk2 = new java.io.File(s"$tgt/g").listFiles()
+      .filter(_.getName.startsWith("v_")).map(_.getName).toSet
+    appended.map(p => new java.io.File(p).getName).foreach(v =>
+      assert(!disk2.contains(v), s"two-generations-old version $v survived GC"))
+    assert(disk2.contains(foreign.getName), "foreign dir swept by ledger GC")
   }
 
   test("a url with typeName= but no typenameColumn stays un-layered (previously-ignored field)") {
@@ -598,40 +602,32 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     def cfg(where: String) =
       s"""{"sources": [{"name": "o", "path": "$sfDir/orders.parquet",
          |  "where": "$where"}],
-         | "load": {"target": "$target", "mode": "truncate"}}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Seq("o_orderstatus = 'F'", "o_orderstatus = 'O'").foreach { w =>
-        Pipeline.run(spark, PipelineCfg.fromJson(cfg(w))).collect(): Unit
-      }
-      val base = new java.io.File(s"$target/o")
-      val sample = spark.read.parquet(s"$sfDir/orders.parquet")
-        .filter(col("o_orderkey") < 40)
-      // old orphan (stamp 0) must go; an in-flight-looking dir with a
-      // stamp NEWER than every retained version must survive
-      sample.write.parquet(s"$target/o/v_0_0_0")
-      sample.write.parquet(s"$target/o/v_${Long.MaxValue}_9_9")
-      val liveBefore = Pipeline.resolvePublished(spark, target, "o")
-      val (kept, deleted) = Pipeline.vacuum(spark, target, "o")
-      assert(deleted == 1, s"expected exactly the old orphan swept, got $deleted")
-      assert(!new java.io.File(base, "v_0_0_0").exists(), "old orphan survived")
-      assert(base.listFiles().exists(_.getName.startsWith(s"v_${Long.MaxValue}")),
-        "in-flight dir must not be swept")
-      assert(kept == 3, s"live + prev + in-flight expected kept, got $kept")
-      // retained generations still fully scannable
-      assert(Pipeline.resolvePublished(spark, target, "o") == liveBefore)
-      assert(spark.read.parquet(liveBefore: _*).count() ==
-        spark.read.parquet(s"$sfDir/orders.parquet")
-          .filter(col("o_orderstatus") === "O").count())
-      // idempotent: a second sweep finds nothing
-      assert(Pipeline.vacuum(spark, target, "o") == ((3, 0)))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
+         | "load": {"target": "$target", "mode": "truncate",
+         |  "publish": "manifest"}}""".stripMargin
+    Seq("o_orderstatus = 'F'", "o_orderstatus = 'O'").foreach { w =>
+      Pipeline.run(spark, PipelineCfg.fromJson(cfg(w))).collect(): Unit
     }
+    val base = new java.io.File(s"$target/o")
+    val sample = spark.read.parquet(s"$sfDir/orders.parquet")
+      .filter(col("o_orderkey") < 40)
+    // old orphan (stamp 0) must go; an in-flight-looking dir with a
+    // stamp NEWER than every retained version must survive
+    sample.write.parquet(s"$target/o/v_0_0_0")
+    sample.write.parquet(s"$target/o/v_${Long.MaxValue}_9_9")
+    val liveBefore = Pipeline.resolvePublished(spark, target, "o")
+    val (kept, deleted) = Pipeline.vacuum(spark, target, "o")
+    assert(deleted == 1, s"expected exactly the old orphan swept, got $deleted")
+    assert(!new java.io.File(base, "v_0_0_0").exists(), "old orphan survived")
+    assert(base.listFiles().exists(_.getName.startsWith(s"v_${Long.MaxValue}")),
+      "in-flight dir must not be swept")
+    assert(kept == 3, s"live + prev + in-flight expected kept, got $kept")
+    // retained generations still fully scannable
+    assert(Pipeline.resolvePublished(spark, target, "o") == liveBefore)
+    assert(spark.read.parquet(liveBefore: _*).count() ==
+      spark.read.parquet(s"$sfDir/orders.parquet")
+        .filter(col("o_orderstatus") === "O").count())
+    // idempotent: a second sweep finds nothing
+    assert(Pipeline.vacuum(spark, target, "o") == ((3, 0)))
   }
 
   test("restore swings the manifest back with zero data movement and is itself reversible") {
@@ -640,37 +636,29 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     def cfg(where: String) =
       s"""{"sources": [{"name": "o", "path": "$sfDir/orders.parquet",
          |  "where": "$where"}],
-         | "load": {"target": "$target", "mode": "truncate"}}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Seq("o_orderstatus = 'F'", "o_orderstatus = 'O'").foreach { w =>
-        Pipeline.run(spark, PipelineCfg.fromJson(cfg(w))).collect(): Unit
-      }
-      val gen1 = Pipeline.resolvePrevGeneration(spark, target, "o")
-      val gen2 = Pipeline.resolvePublished(spark, target, "o")
-      val dirsBefore = new java.io.File(s"$target/o").listFiles()
-        .map(_.getName).filter(_.startsWith("v_")).sorted.toSeq
-      assert(Pipeline.restore(spark, target, "o") == 1)
-      // pure metadata swap: live/prev exchanged, same dirs on disk
-      assert(Pipeline.resolvePublished(spark, target, "o") == gen1)
-      assert(Pipeline.resolvePrevGeneration(spark, target, "o") == gen2)
-      assert(new java.io.File(s"$target/o").listFiles()
-        .map(_.getName).filter(_.startsWith("v_")).sorted.toSeq == dirsBefore,
-        "restore must not move or delete data")
-      // restored bytes readable and correct through the reader path
-      assert(spark.read.parquet(gen1: _*).count() ==
-        spark.read.parquet(s"$sfDir/orders.parquet")
-          .filter(col("o_orderstatus") === "F").count())
-      // reversible: a second restore reverts to generation 2
-      assert(Pipeline.restore(spark, target, "o") == 1)
-      assert(Pipeline.resolvePublished(spark, target, "o") == gen2)
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
+         | "load": {"target": "$target", "mode": "truncate",
+         |  "publish": "manifest"}}""".stripMargin
+    Seq("o_orderstatus = 'F'", "o_orderstatus = 'O'").foreach { w =>
+      Pipeline.run(spark, PipelineCfg.fromJson(cfg(w))).collect(): Unit
     }
+    val gen1 = Pipeline.resolvePrevGeneration(spark, target, "o")
+    val gen2 = Pipeline.resolvePublished(spark, target, "o")
+    val dirsBefore = new java.io.File(s"$target/o").listFiles()
+      .map(_.getName).filter(_.startsWith("v_")).sorted.toSeq
+    assert(Pipeline.restore(spark, target, "o") == 1)
+    // pure metadata swap: live/prev exchanged, same dirs on disk
+    assert(Pipeline.resolvePublished(spark, target, "o") == gen1)
+    assert(Pipeline.resolvePrevGeneration(spark, target, "o") == gen2)
+    assert(new java.io.File(s"$target/o").listFiles()
+      .map(_.getName).filter(_.startsWith("v_")).sorted.toSeq == dirsBefore,
+      "restore must not move or delete data")
+    // restored bytes readable and correct through the reader path
+    assert(spark.read.parquet(gen1: _*).count() ==
+      spark.read.parquet(s"$sfDir/orders.parquet")
+        .filter(col("o_orderstatus") === "F").count())
+    // reversible: a second restore reverts to generation 2
+    assert(Pipeline.restore(spark, target, "o") == 1)
+    assert(Pipeline.resolvePublished(spark, target, "o") == gen2)
   }
 
   test("expire retires exactly the retained history: live untouched, time travel ends, restore refuses") {
@@ -679,37 +667,29 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     def cfg(where: String) =
       s"""{"sources": [{"name": "o", "path": "$sfDir/orders.parquet",
          |  "where": "$where"}],
-         | "load": {"target": "$target", "mode": "truncate"}}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Seq("o_orderstatus = 'F'", "o_orderstatus = 'O'").foreach { w =>
-        Pipeline.run(spark, PipelineCfg.fromJson(cfg(w))).collect(): Unit
-      }
-      val prevDirs = Pipeline.resolvePrevGeneration(spark, target, "o")
-      val live = Pipeline.resolvePublished(spark, target, "o")
-      assert(prevDirs.nonEmpty && Pipeline.expirePrev(spark, target, "o") == 1)
-      prevDirs.foreach { p =>
-        assert(!new java.io.File(new java.net.URI(p).getPath).exists(),
-          s"expired version dir survived: $p")
-      }
-      assert(Pipeline.resolvePrevGeneration(spark, target, "o").isEmpty,
-        "time travel must end after expiry")
-      assert(Pipeline.resolvePublished(spark, target, "o") == live)
-      assert(spark.read.parquet(live: _*).count() ==
-        spark.read.parquet(s"$sfDir/orders.parquet")
-          .filter(col("o_orderstatus") === "O").count())
-      intercept[IllegalArgumentException] {
-        Pipeline.restore(spark, target, "o")
-      }
-      // idempotent: nothing left to expire
-      assert(Pipeline.expirePrev(spark, target, "o") == 0)
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
+         | "load": {"target": "$target", "mode": "truncate",
+         |  "publish": "manifest"}}""".stripMargin
+    Seq("o_orderstatus = 'F'", "o_orderstatus = 'O'").foreach { w =>
+      Pipeline.run(spark, PipelineCfg.fromJson(cfg(w))).collect(): Unit
     }
+    val prevDirs = Pipeline.resolvePrevGeneration(spark, target, "o")
+    val live = Pipeline.resolvePublished(spark, target, "o")
+    assert(prevDirs.nonEmpty && Pipeline.expirePrev(spark, target, "o") == 1)
+    prevDirs.foreach { p =>
+      assert(!new java.io.File(new java.net.URI(p).getPath).exists(),
+        s"expired version dir survived: $p")
+    }
+    assert(Pipeline.resolvePrevGeneration(spark, target, "o").isEmpty,
+      "time travel must end after expiry")
+    assert(Pipeline.resolvePublished(spark, target, "o") == live)
+    assert(spark.read.parquet(live: _*).count() ==
+      spark.read.parquet(s"$sfDir/orders.parquet")
+        .filter(col("o_orderstatus") === "O").count())
+    intercept[IllegalArgumentException] {
+      Pipeline.restore(spark, target, "o")
+    }
+    // idempotent: nothing left to expire
+    assert(Pipeline.expirePrev(spark, target, "o") == 0)
   }
 
   test("branching: writes isolated, ff-merge swings main, diverged merge refuses and changes nothing") {
@@ -767,30 +747,22 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     def cfg(mode: String, where: String) =
       s"""{"sources": [{"name": "t", "path": "$sfDir/orders.parquet",
          |  "where": "$where"}],
-         | "load": {"target": "$target", "mode": "$mode"}}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Pipeline.run(spark, config.PipelineCfg.fromJson(
-        cfg("truncate", "o_orderkey % 2 = 0"))).collect()
-      Pipeline.run(spark, config.PipelineCfg.fromJson(
-        cfg("truncate", "o_orderkey % 2 = 1"))).collect()
-      // truncate: one added, one removed, nothing shared
-      val (a1, r1, k1) = Pipeline.diffGenerations(spark, target, "t")
-      assert(a1.size == 1 && r1.size == 1 && k1.isEmpty, s"$a1 $r1 $k1")
-      // append leaves the prev ledger at the last TRUNCATE supersede, so
-      // the diff accumulates: BOTH post-truncate versions count as added
-      Pipeline.run(spark, config.PipelineCfg.fromJson(
-        cfg("append", "o_orderkey % 2 = 0"))).collect()
-      val (a2, r2, k2) = Pipeline.diffGenerations(spark, target, "t")
-      assert(a2.size == 2 && r2 == r1 && k2.isEmpty,
-        s"append diff must accumulate against the truncate base: $a2 $r2 $k2")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
-    }
+         | "load": {"target": "$target", "mode": "$mode",
+         |  "publish": "manifest"}}""".stripMargin
+    Pipeline.run(spark, config.PipelineCfg.fromJson(
+      cfg("truncate", "o_orderkey % 2 = 0"))).collect()
+    Pipeline.run(spark, config.PipelineCfg.fromJson(
+      cfg("truncate", "o_orderkey % 2 = 1"))).collect()
+    // truncate: one added, one removed, nothing shared
+    val (a1, r1, k1) = Pipeline.diffGenerations(spark, target, "t")
+    assert(a1.size == 1 && r1.size == 1 && k1.isEmpty, s"$a1 $r1 $k1")
+    // append leaves the prev ledger at the last TRUNCATE supersede, so
+    // the diff accumulates: BOTH post-truncate versions count as added
+    Pipeline.run(spark, config.PipelineCfg.fromJson(
+      cfg("append", "o_orderkey % 2 = 0"))).collect()
+    val (a2, r2, k2) = Pipeline.diffGenerations(spark, target, "t")
+    assert(a2.size == 2 && r2 == r1 && k2.isEmpty,
+      s"append diff must accumulate against the truncate base: $a2 $r2 $k2")
   }
 
   test("incremental read: peek does not advance, commit does, every version consumed exactly once") {
@@ -800,35 +772,27 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     def cfg(where: String) =
       s"""{"sources": [{"name": "t", "path": "$sfDir/orders.parquet",
          |  "where": "$where"}],
-         | "load": {"target": "$target", "mode": "append"}}""".stripMargin
-    val prior = spark.conf.getOption("graft.publish.mode")
-    spark.conf.set("graft.publish.mode", "manifest")
-    try {
-      Pipeline.run(spark, config.PipelineCfg.fromJson(cfg("o_orderkey % 4 = 0"))).collect()
-      // peek (commit=false): same answer twice, cursor untouched
-      val p1 = Pipeline.readIncremental(spark, target, "t", "c", commit = false)
-      val p2 = Pipeline.readIncremental(spark, target, "t", "c", commit = false)
-      assert(p1.size == 1 && p1 == p2, "peek must not advance the cursor")
-      // commit: consumed once, then exhausted
-      val c1 = Pipeline.readIncremental(spark, target, "t", "c")
-      assert(c1 == p1, "commit read must see what peek saw")
-      assert(Pipeline.readIncremental(spark, target, "t", "c").isEmpty)
-      // a second consumer group has its OWN cursor
-      val other = Pipeline.readIncremental(spark, target, "t", "c2")
-      assert(other == p1, "consumer groups must be independent")
-      // new publish: only the delta comes back, and its bytes are the slice
-      Pipeline.run(spark, config.PipelineCfg.fromJson(cfg("o_orderkey % 4 = 1"))).collect()
-      val c2 = Pipeline.readIncremental(spark, target, "t", "c")
-      assert(c2.size == 1 && !c1.contains(c2.head))
-      val n = spark.read.parquet(c2: _*).count()
-      val want = spark.read.parquet(s"$sfDir/orders.parquet")
-        .where("o_orderkey % 4 = 1").count()
-      assert(n == want, s"delta rows $n != slice $want")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("graft.publish.mode", v)
-        case None    => spark.conf.unset("graft.publish.mode")
-      }
-    }
+         | "load": {"target": "$target", "mode": "append",
+         |  "publish": "manifest"}}""".stripMargin
+    Pipeline.run(spark, config.PipelineCfg.fromJson(cfg("o_orderkey % 4 = 0"))).collect()
+    // peek (commit=false): same answer twice, cursor untouched
+    val p1 = Pipeline.readIncremental(spark, target, "t", "c", commit = false)
+    val p2 = Pipeline.readIncremental(spark, target, "t", "c", commit = false)
+    assert(p1.size == 1 && p1 == p2, "peek must not advance the cursor")
+    // commit: consumed once, then exhausted
+    val c1 = Pipeline.readIncremental(spark, target, "t", "c")
+    assert(c1 == p1, "commit read must see what peek saw")
+    assert(Pipeline.readIncremental(spark, target, "t", "c").isEmpty)
+    // a second consumer group has its OWN cursor
+    val other = Pipeline.readIncremental(spark, target, "t", "c2")
+    assert(other == p1, "consumer groups must be independent")
+    // new publish: only the delta comes back, and its bytes are the slice
+    Pipeline.run(spark, config.PipelineCfg.fromJson(cfg("o_orderkey % 4 = 1"))).collect()
+    val c2 = Pipeline.readIncremental(spark, target, "t", "c")
+    assert(c2.size == 1 && !c1.contains(c2.head))
+    val n = spark.read.parquet(c2: _*).count()
+    val want = spark.read.parquet(s"$sfDir/orders.parquet")
+      .where("o_orderkey % 4 = 1").count()
+    assert(n == want, s"delta rows $n != slice $want")
   }
 }

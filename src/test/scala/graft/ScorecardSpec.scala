@@ -47,14 +47,4 @@ class ScorecardSpec extends AnyFunSuite with SparkTestBase {
       assert(s != 0L && x != 0L, s"$g fingerprint degenerate: sum=$s xor=$x")
     }
   }
-
-  test("union and concurrent digest collection shapes are bit-identical") {
-    def run(): Seq[Seq[Any]] = graft.operators.Scorecard
-      .streamScorecard(spark, sfDir).collect().map(_.toSeq).toSeq
-    val concurrent = run()
-    spark.conf.set("graft.scorecard.union", "true")
-    try assert(run() == concurrent,
-      "the conf-keyed union path must reproduce the concurrent digests exactly")
-    finally spark.conf.unset("graft.scorecard.union")
-  }
 }
