@@ -39,8 +39,7 @@ object PlanDump {
       .config("spark.local.dir", s"$work/local")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Seq("graft.scratch.root" -> "scratch", "graft.ivf.root" -> "ivf", "graft.lm.root" -> "lm",
-      "graft.card.root" -> "card").foreach { case (k, s) => spark.conf.set(k, s"$work/$s") }
+    spark.conf.set("graft.scratch.root", s"$work/scratch")
     val seen = ArrayBuffer.empty[String]
     spark.listenerManager.register(new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen.synchronized {

@@ -20,11 +20,12 @@ object Tables {
   val DefaultScratchRoot = "/root/repo/target"
 
   /** Scratch root for write-path operators (staging snapshots, resume
-    * ledgers, compaction batches, demo pipeline targets): one conf key,
-    * `graft.scratch.root`, with the build's target dir as the default —
-    * the `graft.ivf.root` portability pattern applied engine-wide, so no
-    * operator bakes in an absolute path and concurrent runs can isolate
-    * by pointing the key at distinct roots. */
+    * ledgers, compaction batches, demo pipeline targets) and for the
+    * persisted corpus artifacts ([[graft.io.Artifacts]]: IVF index, LM
+    * scores, corpus-cardinality estimate): one conf key,
+    * `graft.scratch.root`, with the build's target dir as the default, so
+    * no operator bakes in an absolute path and concurrent runs can
+    * isolate by pointing the key at distinct roots. */
   def scratch(spark: SparkSession, name: String): String =
     spark.conf.get("graft.scratch.root", DefaultScratchRoot) + "/" + name
 

@@ -67,16 +67,25 @@ object ParquetSchemas {
   private def keyOf(spark: SparkSession, path: String): Option[Key] =
     if (path.exists("{}[]*?\\".contains(_))) None
     else try {
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def files(st: FileStatus): Seq[FileStatus] =
-        if (!st.isDirectory) Seq(st)
-        else fs.listStatus(st.getPath).toSeq
-          .filterNot(s => GraftShims.hiddenPathName(s.getPath.getName))
-          .flatMap(files)
-      val root = fs.getFileStatus(p)
-      Some(Key(root.getPath.toString,
-        files(root).map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted,
+      val (qualified, files) = listing(spark, path)
+      Some(Key(qualified, files,
         spark.conf.getAll.toSeq.filter { case (k, _) => inferenceConf(k) }.sorted))
     } catch { case NonFatal(_) => None }
+
+  /** The listing signature of `path`: its qualified form, and the sorted
+    * (path, length, modification time) of every file Spark's file index
+    * sees under it, recursively. Also the staleness stamp of
+    * [[Artifacts]]. Throws when `path` does not exist. */
+  private[io] def listing(spark: SparkSession, path: String): (String, Seq[(String, Long, Long)]) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(s => GraftShims.hiddenPathName(s.getPath.getName))
+        .flatMap(files)
+    val root = fs.getFileStatus(p)
+    (root.getPath.toString,
+      files(root).map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted)
+  }
 }

@@ -191,54 +191,20 @@ object Dedup {
       .orderBy(col("status"))
   }
 
-  /** Corpus-cardinality estimate persisted beside the corpus (the IVF
-    * `_GRAFT_STAMP` pattern applied to statistics): keyed by the corpus
-    * table's file stamp, so steady-state incremental dedup sizes its
-    * bloom with zero corpus scans per batch. Any corpus change breaks the
-    * stamp and the next call re-measures ONCE. A stale-but-matching
-    * estimate can only shift the screen's false-positive rate — the exact
-    * verify join keeps correctness regardless. `compute` is by-name: it
-    * runs only on a stamp miss. Publish is write-tmp + atomic move, so a
-    * concurrent reader never sees a torn cache.
-    *
-    * `statTag` names WHAT was computed and is folded into the cache-file
-    * key: two callers caching different statistics for the same corpus
-    * dir get distinct files instead of silently serving each other's
-    * numbers. Caveat: the stamp carries name:length:mtime — a rewrite
-    * that preserves all three (same sizes within one mtime granularity
-    * tick) would serve the stale value; acceptable here because a stale
-    * estimate only shifts FPR, never correctness. Don't reuse this cache
-    * for a statistic where staleness would be a correctness bug. */
-  def cachedCorpusEstimate(spark: SparkSession, dir: String, compute: => Long,
-      statTag: String = "fp_approx_distinct"): Long = {
-    val f = new java.io.File(s"$dir/documents.parquet")
-    val files = if (f.isDirectory) f.listFiles().toSeq else Seq(f)
-    val stamp = files.map(x => s"${x.getName}:${x.length}:${x.lastModified}")
-      .sorted.mkString("|")
-    val root = new java.io.File(
-      spark.conf.get("graft.card.root", "/root/repo/target/graft_card"))
-    root.mkdirs()
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest((new java.io.File(dir).getAbsolutePath + "\u0000" + statTag)
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(10)
-    val cache = new java.io.File(root, s"card_$h")
-    val hit =
-      if (!cache.exists()) None
-      else {
-        val lines = java.nio.file.Files.readAllLines(cache.toPath)
-        if (lines.size == 2 && lines.get(0) == stamp) Some(lines.get(1).toLong)
-        else None
-      }
-    hit.getOrElse {
-      val v = compute
-      val tmp = new java.io.File(root, s"card_${h}_tmp_${ProcessHandle.current().pid()}")
-      java.nio.file.Files.write(tmp.toPath, java.util.Arrays.asList(stamp, v.toString))
-      java.nio.file.Files.move(tmp.toPath, cache.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      v
+  /** Corpus-cardinality estimate (approximate distinct fingerprints),
+    * persisted as a [[graft.io.Artifacts]] version of `documents.parquet`,
+    * so steady-state incremental dedup sizes its bloom with zero corpus
+    * scans per batch. Any corpus rewrite the listing sees builds a new
+    * version, and the next call re-measures ONCE. `compute` is by-name:
+    * it runs only when the version is missing. A stale estimate could
+    * only shift the screen's false-positive rate — the exact verify join
+    * keeps correctness regardless. */
+  def cachedCorpusEstimate(spark: SparkSession, dir: String, compute: => Long): Long = {
+    val verDir = graft.io.Artifacts.version(spark, "card", dir, "documents.parquet",
+        "fp_approx_distinct") { tmp =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(tmp, "estimate"), compute.toString)
     }
+    java.nio.file.Files.readString(java.nio.file.Paths.get(verDir, "estimate")).toLong
   }
 
   /** The classification core of F24, factored so specs can plant every
@@ -268,8 +234,8 @@ object Dedup {
     // partial-aggregated HLL scan — no shuffle of the fp set itself).
     // STEADY STATE: the estimate only sizes the screen, so a caller that
     // already knows the corpus cardinality — catalog statistics, or a
-    // count persisted beside the corpus at its last rebuild (the IVF
-    // `_GRAFT_STAMP` pattern) — passes it and classification stays LAZY:
+    // count persisted per corpus version ([[cachedCorpusEstimate]]) —
+    // passes it and classification stays LAZY:
     // no per-batch eager pass over a 100 TB corpus just to size a
     // ≤32 MiB bloom. The HLL scan is the no-estimate fallback, and a
     // stale estimate only shifts the screen's FPR, never correctness

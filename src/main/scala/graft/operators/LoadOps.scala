@@ -429,9 +429,7 @@ object LoadOps {
     * collapse itself is spec-asserted (file counts are FS detail, not
     * query semantics). */
   def loadCompaction(spark: SparkSession, dir: String, nBatches: Int = 8): DataFrame = {
-    // scratch root is conf-keyed (the graft.ivf.root pattern) so the op
-    // is portable across checkouts and concurrent runs can isolate
-    val base = spark.conf.get("graft.compact.root", Tables.scratch(spark, "graft_compact"))
+    val base = Tables.scratch(spark, "graft_compact")
     val frag = s"$base/frag"
     val comp = s"$base/compact"
     val src = Tables(spark, dir).orders
@@ -978,10 +976,8 @@ object LoadOps {
       .select(col("supp_batch")).collect().map(_.getLong(0)).toSeq.sorted
   }
 
-  /** Root of the D27 z-order layout (conf-keyed, the graft.ivf.root
-    * pattern). */
-  def zorderRoot(spark: SparkSession): String =
-    spark.conf.get("graft.zorder.root", Tables.scratch(spark, "graft_zorder"))
+  /** Root of the D27 z-order layout. */
+  def zorderRoot(spark: SparkSession): String = Tables.scratch(spark, "graft_zorder")
 
   /** The D27 z-value: both cluster columns scaled to a 16-bit grid with
     * INTEGER arithmetic only (`div` truncates, both inputs non-negative,
@@ -1818,10 +1814,8 @@ object LoadOps {
       .orderBy(col("event_type"))
   }
 
-  /** Root of the D28 backfill layout (conf-keyed, the graft.ivf.root
-    * pattern). */
-  def backfillRoot(spark: SparkSession): String =
-    spark.conf.get("graft.backfill.root", Tables.scratch(spark, "graft_backfill"))
+  /** Root of the D28 backfill layout. */
+  def backfillRoot(spark: SparkSession): String = Tables.scratch(spark, "graft_backfill")
 
   /** Source frame for D28: orders keyed by calendar month. */
   private def ordersByMonth(spark: SparkSession, dir: String): DataFrame =
@@ -1879,10 +1873,8 @@ object LoadOps {
       .orderBy(col("month"))
   }
 
-  /** Root of the D32 dynamic-overwrite layout (conf-keyed, the
-    * graft.ivf.root pattern). */
-  def dynOverwriteRoot(spark: SparkSession): String =
-    spark.conf.get("graft.dynover.root", Tables.scratch(spark, "graft_dynover"))
+  /** Root of the D32 dynamic-overwrite layout. */
+  def dynOverwriteRoot(spark: SparkSession): String = Tables.scratch(spark, "graft_dynover")
 
   /** The D32 restatement pass, shared with the spec: derive the restated
     * batch from the source (months with serial ≡ 3 mod 17, prices bumped
@@ -1931,10 +1923,8 @@ object LoadOps {
       .orderBy(col("month"))
   }
 
-  /** Root of the D26 merge-on-read layout (conf-keyed, the
-    * graft.ivf.root pattern). */
-  def morRoot(spark: SparkSession): String =
-    spark.conf.get("graft.mor.root", Tables.scratch(spark, "graft_mor"))
+  /** Root of the D26 merge-on-read layout. */
+  def morRoot(spark: SparkSession): String = Tables.scratch(spark, "graft_mor")
 
   /** The merged (live-rows) view of the D26 layout: base minus every key
     * any delete file carries. ONE definition shared by the registered
@@ -2844,8 +2834,7 @@ object LoadOps {
     * corpus, which grows linearly with it. */
   def loadErasure(spark: SparkSession, dir: String, nBuckets: Int = 16): DataFrame = {
     val t = Tables(spark, dir)
-    val root = spark.conf.get("graft.erasure.root",
-      Tables.scratch(spark, "graft_erasure"))
+    val root = Tables.scratch(spark, "graft_erasure")
     val tgt = s"$root/orders"
     val laid = t.orders
       .withColumn("bucket", pmod(col("o_custkey"), lit(nBuckets)).cast("int"))

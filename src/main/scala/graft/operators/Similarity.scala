@@ -344,34 +344,6 @@ object Similarity {
         col("best.v").as("v"), col("best.c_label").as("list_id"))
   }
 
-  /** Persisted IVF index (the real-IVF layout contract): inverted lists
-    * written ONCE `partitionBy(list_id)` — the D8 partitioned-prune
-    * contract ([[LoadOps.partitionedPrune]]) applied to ANN — with the
-    * per-vector norm precomputed and the trained quantizer persisted next
-    * to the lists. Queries re-read the layout with a `list_id` filter, so
-    * the scan prunes to the probed directories (`PartitionFilters` in the
-    * plan) instead of recomputing assignment per query — at 100 TB the
-    * assignment job runs once per corpus version, and a query touches
-    * nprobe partitions. Rebuilds automatically when the input table's
-    * file stamp changes (a stale index must never serve a new corpus). */
-  /** Index root for a corpus dir: configurable base
-    * (`graft.ivf.root` in the session conf) + a readable basename +
-    * a full-path hash — two dirs whose lossy sanitizations collide
-    * ("/data/sf-1" vs "/data/sf_1") still get distinct index roots. */
-  def ivfRoot(spark: SparkSession, dir: String): String = {
-    val base = spark.conf.get("graft.ivf.root", "/root/repo/target/graft_ivf")
-    val abs = new java.io.File(dir).getAbsolutePath
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(10)
-    val name = abs.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "").takeRight(40)
-    s"$base/${name}_$h"
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(): Unit
-  }
-
   /** Lloyd refinement passes the index build runs over the coarse
     * quantizer before assignment ([[refineCentroids]], conf key
     * `graft.ivf.refine`, default 0 — the label-mean quantizer, which the
@@ -387,31 +359,25 @@ object Similarity {
     n
   }
 
+  /** Persisted IVF index (the real-IVF layout contract): inverted lists
+    * written ONCE `partitionBy(list_id)` — the D8 partitioned-prune
+    * contract ([[LoadOps.partitionedPrune]]) applied to ANN — with the
+    * per-vector norm precomputed and the trained quantizer persisted next
+    * to the lists. Queries re-read the layout with a `list_id` filter, so
+    * the scan prunes to the probed directories (`PartitionFilters` in the
+    * plan) instead of recomputing assignment per query — at 100 TB the
+    * assignment job runs once per corpus version, and a query touches
+    * nprobe partitions. The layout is a [[graft.io.Artifacts]] version of
+    * `embeddings.parquet`: any rewrite of the table builds a new version
+    * (a stale index must never serve a new corpus). */
   def ivfIndex(spark: SparkSession, dir: String): (String, Seq[(Int, Seq[Double])]) = {
     import spark.implicits._
-    val root = ivfRoot(spark, dir)
     val refine = ivfRefinePasses(spark)
-    val stamp = {
-      val f = new java.io.File(s"$dir/embeddings.parquet")
-      val files = if (f.isDirectory) f.listFiles().toSeq else Seq(f)
-      // layout epoch prefix: bumping it invalidates indexes built under an
-      // older SCHEMA (pq2 = lists carry PQ sub-codes; pq3 = rows also
-      // carry their label for attribute-filtered serving) even when the
-      // corpus itself is unchanged; the refine count is build CONFIG, so
-      // it keys the version the same way
-      s"pq3|refine=$refine|" +
-        files.map(x => s"${x.getName}:${x.length}:${x.lastModified}").sorted.mkString("|")
-    }
-    // versioned layout: the corpus stamp names the version directory, so
-    // a reader can never observe a half-overwritten index — a rebuild
-    // materializes a NEW version and publishes it with one atomic rename
-    // (two concurrent builders of the same corpus: the rename loser
-    // discards its copy and reads the winner's)
-    val ver = java.security.MessageDigest.getInstance("MD5")
-      .digest(stamp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val verDir = new java.io.File(s"$root/v_$ver")
-    if (!verDir.exists()) {
-      val tmp = new java.io.File(s"$root/v_${ver}_tmp_${ProcessHandle.current().pid()}")
+    // epoch: pq2 = lists carry PQ sub-codes; pq3 = rows also carry their
+    // label for attribute-filtered serving; the refine count is build
+    // config, so it keys the version the same way
+    val verDir = graft.io.Artifacts.version(spark, "ivf", dir, "embeddings.parquet",
+        s"pq3|refine=$refine") { tmp =>
       val e = vectors(spark, dir)
       // coarse quantizer: label means, then `refine` Lloyd passes — each
       // pass is one distributed reassign + recompute with the |lists|×dims
@@ -441,31 +407,6 @@ object Similarity {
         .repartition(col("list_id"))           // one file per list directory
         .write.mode("overwrite").partitionBy("list_id").parquet(s"$tmp/lists")
       cents.toDF("list_id", "cv").write.mode("overwrite").parquet(s"$tmp/centroids")
-      if (!tmp.renameTo(verDir)) {
-        rmTree(tmp)
-        require(verDir.exists(), s"ivf index publish failed for $verDir")
-      }
-      // human-readable current-stamp marker, written LAST (readers key on
-      // the version hash, so a torn marker can never dangle)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/_GRAFT_STAMP"), stamp): Unit
-      // GC superseded corpus versions — runs only when the corpus CHANGED
-      // (concurrent same-corpus JVMs share one version and never GC);
-      // crashed builders' _tmp_ dirs are left alone. ONE-VERSION GRACE:
-      // ivfIndex returns a listsPath that queries read lazily, so a JVM
-      // that resolved the old version may still be mid-scan when this
-      // rebuild publishes — the newest superseded version therefore
-      // survives one more generation, and only versions at least two
-      // rebuilds old are deleted.
-      // deterministic generation order: mtime desc, name as tie-break —
-      // two versions landing within one coarse-mtime tick must still
-      // agree on which one the grace window keeps
-      verDir.getParentFile.listFiles()
-        .filter(f => f.getName.startsWith("v_") && f.getName != verDir.getName &&
-          !f.getName.contains("_tmp_"))
-        .sortBy(f => (-f.lastModified, f.getName))
-        .drop(1)
-        .foreach(rmTree)
     }
     val listsPath = s"$verDir/lists"
     val cents = spark.read.parquet(s"$verDir/centroids").collect()

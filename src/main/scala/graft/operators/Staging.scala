@@ -99,10 +99,7 @@ object Staging {
     * counts), so a reader can audit the evolution boundary instead of
     * discovering it as a downstream NPE. */
   def schemaEvolve(spark: SparkSession, dir: String): DataFrame = {
-    // layout root is conf-keyed (the graft.ivf.root pattern) so the op
-    // is portable across checkouts and concurrent runs can isolate
-    val root = spark.conf.get("graft.evolve.root",
-      Tables.scratch(spark, "graft_evolve")) + "/part"
+    val root = Tables.scratch(spark, "graft_evolve/part")
     val t = Tables(spark, dir).part
     // generation 1: written before the price column existed
     t.select(col("p_partkey"), col("p_name")).withColumn("gen", lit(1))
@@ -351,10 +348,8 @@ object Staging {
       .orderBy(col("nationkey"))
   }
 
-  /** Root of the B9 quarantine layout (conf-keyed, the graft.ivf.root
-    * pattern). */
-  def quarantineRoot(spark: SparkSession): String =
-    spark.conf.get("graft.quarantine.root", Tables.scratch(spark, "graft_quarantine"))
+  /** Root of the B9 quarantine layout. */
+  def quarantineRoot(spark: SparkSession): String = Tables.scratch(spark, "graft_quarantine")
 
   /** B9: DEAD-LETTER quarantine routing — the load-side complement of
     * D6/D11's response validation: instead of failing the batch on the

@@ -459,62 +459,19 @@ object TextAnalysis {
     * training-data filter. Two distributed passes + one broadcast join;
     * per-doc work is linear in characters.
     *
-    * Served from a PERSISTED corpus-stamped layout (the ivfIndex pattern,
-    * Similarity.scala): the tokenize → explode → train → score job runs
+    * Served from a PERSISTED [[graft.io.Artifacts]] version of
+    * `documents.parquet`: the tokenize → explode → train → score job runs
     * once per corpus version and lands as a (doc_id, n_bigrams,
-    * avg_logprob) parquet under `graft.lm.root`; every consumer
-    * (`text_lm_score`, [[ccnetBuckets]]) re-reads the scores instead of
-    * re-tokenizing the corpus — at 100 TB the LM pass is a once-per-
-    * corpus-version indexing job, not a per-query cost. The stamp covers
-    * the documents table's file names/sizes/mtimes, so a corpus change
-    * rebuilds into a NEW version and publishes it with one atomic rename
-    * (rename loser discards its copy and serves the winner's). */
+    * avg_logprob) parquet; every consumer (`text_lm_score`,
+    * [[ccnetBuckets]]) re-reads the scores instead of re-tokenizing the
+    * corpus — at 100 TB the LM pass is a once-per-corpus-version indexing
+    * job, not a per-query cost. Any rewrite of the documents table builds
+    * a new version. */
   def lmScore(spark: SparkSession, dir: String): DataFrame = {
-    val verDir = new java.io.File(lmVersionDir(spark, dir))
-    if (!verDir.exists()) {
-      val tmp = new java.io.File(
-        s"${verDir.getPath}_tmp_${ProcessHandle.current().pid()}")
-      lmScoreFresh(spark, dir).write.mode("overwrite").parquet(s"$tmp/scores")
-      if (!tmp.renameTo(verDir)) {
-        rmTree(tmp)
-        require(verDir.exists(), s"lm layout publish failed for $verDir")
-      }
-      // GC versions superseded at least two rebuilds ago (one-version
-      // grace: a concurrent reader may still lazily scan the previous
-      // version — mirror of the IVF layout's GC contract)
-      val vers = Option(verDir.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("v_") && !f.getName.contains("_tmp_"))
-        .sortBy(f => (-f.lastModified(), f.getName))
-      vers.drop(2).foreach(rmTree)
+    val verDir = graft.io.Artifacts.version(spark, "lm", dir, "documents.parquet", "lm1") {
+      tmp => lmScoreFresh(spark, dir).write.mode("overwrite").parquet(s"$tmp/scores")
     }
-    spark.read.parquet(s"${verDir.getPath}/scores").orderBy(col("doc_id"))
-  }
-
-  /** Layout root for a corpus dir: configurable base (`graft.lm.root`)
-    * + readable basename + full-path hash — distinct even when two dirs'
-    * lossy sanitizations collide. */
-  def lmRoot(spark: SparkSession, dir: String): String = {
-    val base = spark.conf.get("graft.lm.root", "/root/repo/target/graft_lm")
-    val abs = new java.io.File(dir).getAbsolutePath
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(10)
-    val name = abs.replaceAll("[^A-Za-z0-9.]+", "_").replaceAll("^_+", "").takeRight(40)
-    s"$base/${name}_$h"
-  }
-
-  private def lmVersionDir(spark: SparkSession, dir: String): String = {
-    val f = new java.io.File(s"$dir/documents.parquet")
-    val files = if (f.isDirectory) f.listFiles().toSeq else Seq(f)
-    val stamp = "lm1|" +
-      files.map(x => s"${x.getName}:${x.length}:${x.lastModified}").sorted.mkString("|")
-    val ver = java.security.MessageDigest.getInstance("MD5")
-      .digest(stamp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${lmRoot(spark, dir)}/v_$ver"
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(rmTree)
-    f.delete(): Unit
+    spark.read.parquet(s"$verDir/scores").orderBy(col("doc_id"))
   }
 
   /** The (doc_id, bg, cnt) cell stage of the F20 build, pre-checkpoint —

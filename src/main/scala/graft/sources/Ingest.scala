@@ -866,8 +866,7 @@ object Ingest {
   /** A6: full-snapshot re-ingest (read side of load_sde.py's
     * truncate-and-load): write a snapshot, read it back, reconcile. */
   def snapshotLoad(spark: SparkSession, dir: String): DataFrame = {
-    val out = spark.conf.get("graft.snapshot.root",
-      Tables.scratch(spark, "graft_snapshot")) + "/lineitem"
+    val out = Tables.scratch(spark, "graft_snapshot/lineitem")
     Tables(spark, dir).lineitem
       .filter(col("l_returnflag") === "R")
       .write.mode("overwrite").parquet(out)
@@ -949,10 +948,7 @@ object Ingest {
     * against the source table, so a lossy or reordered round-trip
     * hash-mismatches the oracle. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    // staging root is conf-keyed (the graft.ivf.root pattern) so the op
-    // is portable across checkouts and concurrent runs can isolate
-    val out = spark.conf.get("graft.snapshot.root",
-      Tables.scratch(spark, "graft_snapshot")) + "/lineitem_orc"
+    val out = Tables.scratch(spark, "graft_snapshot/lineitem_orc")
     Tables(spark, dir).lineitem
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_returnflag"))
       .write.mode("overwrite").orc(out)

@@ -18,12 +18,6 @@ final case class SourceEvent(ts: java.sql.Timestamp, source: String)
 final case class StaleAlert(source: String, last_seen_sec: Long)
 private final case class FreshState(lastSec: Long)
 
-/** Input/output rows for the streaming decay-average monitor (G10). */
-final case class RunDuration(source: String, day: Long, duration: Double)
-final case class SmoothedRun(source: String, day: Long, duration: Double,
-    smoothed: Double, anomaly_ratio: Double)
-private final case class DecayState(day: Long, num: Double, den: Double)
-
 /** Input/output rows for the streaming circuit breaker (G13). */
 /** G14: one row-level change event of a CDC subscription (D34 shape). */
 final case class ChangeEvent(key: Long, seq: Long, op: String, value: Double)
@@ -315,44 +309,6 @@ object EventStreams {
           }
           cur.foreach(state.update)
           closed.iterator
-      }
-  }
-
-  /** G10: streaming decay-average monitoring — the continuous form of
-    * the batch baseline (LoadOps.decayAvg, D19): per source, the
-    * half-life-one-day weighted average maintained as an O(1) numerator/
-    * denominator recurrence (num·w + d, den·w + 1 with w = 0.5^gap) that
-    * carries across micro-batches, so every arriving run gets an anomaly
-    * ratio against the baseline built from ALL its history — no window
-    * recompute, no growing state. (The batch op bounds its window at 7
-    * days and recomputes; the streaming recurrence is the
-    * unbounded-history form — the standard trade for O(1) state.) Days
-    * must arrive non-decreasing per source (a production deployment
-    * watermarks the input; the spec feeds ordered batches). */
-  def decayAvgStream(runs: Dataset[RunDuration]): Dataset[SmoothedRun] = {
-    import runs.sparkSession.implicits._
-    runs.groupByKey(_.source)
-      .flatMapGroupsWithState[DecayState, SmoothedRun](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[RunDuration], state: GroupState[DecayState]) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[SmoothedRun]
-          var cur = state.getOption
-          rows.toSeq.sortBy(_.day).foreach { r =>
-            val (num0, den0) = cur match {
-              case Some(s) =>
-                val w = math.pow(0.5, (r.day - s.day).toDouble)
-                (s.num * w, s.den * w)
-              case None => (0.0, 0.0)
-            }
-            val num = num0 + r.duration
-            val den = den0 + 1.0
-            val sm = num / den
-            out += SmoothedRun(src, r.day, r.duration,
-              math.rint(sm * 10000) / 10000, math.rint(r.duration / sm * 10000) / 10000)
-            cur = Some(DecayState(r.day, num, den))
-          }
-          cur.foreach(state.update)
-          out.iterator
       }
   }
 

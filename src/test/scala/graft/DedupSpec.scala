@@ -349,13 +349,18 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("corpus-cardinality cache: stamp hit skips the scan, corpus change re-measures") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_card").toFile
-    val corpusDir = new java.io.File(tmp, "corpus"); corpusDir.mkdirs()
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
-      new java.io.File(corpusDir, "documents.parquet").toPath)
-    val docFile = new java.io.File(corpusDir, "documents.parquet")
-    spark.conf.set("graft.card.root", s"$tmp/card")
-    try {
+    // the same table as one file, and as one leaf below a partition dir:
+    // rewriting that leaf leaves every entry of the table's top level as is
+    val layouts = Seq("corpus" -> "documents.parquet",
+      "nested" -> "documents.parquet/lang=en/part-0.parquet").map { case (d, leaf) =>
+      val docFile = new java.io.File(tmp, s"$d/$leaf")
+      docFile.getParentFile.mkdirs()
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sfDir/documents.parquet"), docFile.toPath)
+      (new java.io.File(tmp, d), docFile)
+    }
+    spark.conf.set("graft.scratch.root", tmp.getPath)
+    try layouts.foreach { case (corpusDir, docFile) =>
       var computes = 0
       def call() = Dedup.cachedCorpusEstimate(spark, corpusDir.getPath, { computes += 1; 777L })
       assert(call() == 777L && computes == 1, "first call must measure")
@@ -365,7 +370,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       assert(call() == 777L && computes == 2, "stamp break must re-measure once")
       assert(call() == 777L && computes == 2)
     } finally {
-      spark.conf.unset("graft.card.root")
+      spark.conf.unset("graft.scratch.root")
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm)
         f.delete(): Unit

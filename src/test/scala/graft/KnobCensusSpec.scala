@@ -3,22 +3,21 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Census of the run-time knobs the engine reads: every environment
-  * variable named through `sys.env`/`System.getenv` and every `graft.*`
-  * session conf key read through `conf.get*` under `src/main`. The lists
-  * below are the whole set, so a new knob is a deliberate edit here. */
+  * variable named through `sys.env`/`System.getenv`, every `graft.*`
+  * session conf key read through `conf.get*` and every absolute path
+  * default under `src/main`. The lists below are the whole set, so a
+  * new knob or baked-in path is a deliberate edit here. */
 class KnobCensusSpec extends AnyFunSuite {
 
   private val envVars = Set("SPARK_GRAFT_CPUS", "ETL_ENVIRONMENT")
 
-  private val graftKeys = Set(
-    "graft.backfill.root", "graft.card.root", "graft.compact.root",
-    "graft.dynover.root", "graft.erasure.root", "graft.evolve.root",
-    "graft.ivf.root", "graft.lm.root", "graft.mor.root",
-    "graft.quarantine.root", "graft.scratch.root", "graft.snapshot.root",
-    "graft.zorder.root",
-    "graft.ivf.nprobe", "graft.ivf.refine")
+  private val graftKeys = Set("graft.scratch.root", "graft.ivf.nprobe", "graft.ivf.refine")
 
-  private lazy val sources: Seq[String] = {
+  /** Files holding an absolute path default: the scratch root and the
+    * sample-data directory of the entry point and `RunQuery`. */
+  private val pathDefaultFiles = Seq("RunQuery.scala", "SparkEntry.scala", "Tables.scala")
+
+  private lazy val sources: Seq[(String, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"${root.getAbsolutePath} not found")
     def walk(f: java.io.File): Seq[java.io.File] =
@@ -26,13 +25,13 @@ class KnobCensusSpec extends AnyFunSuite {
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     walk(root).map { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.mkString finally src.close()
+      try f.getName -> src.mkString finally src.close()
     }
   }
 
   private def names(pattern: String): Set[String] = {
     val re = pattern.r
-    sources.flatMap(s => re.findAllMatchIn(s).map(_.group(1))).toSet
+    sources.flatMap { case (_, s) => re.findAllMatchIn(s).map(_.group(1)) }.toSet
   }
 
   test("environment variables read under src/main are exactly the listed ones") {
@@ -46,5 +45,15 @@ class KnobCensusSpec extends AnyFunSuite {
     val read = names("""conf\.get[A-Za-z]*\(\s*"(graft\.[^"]+)"""")
     assert(read == graftKeys,
       s"unlisted: ${read -- graftKeys}; listed but not read: ${graftKeys -- read}")
+  }
+
+  test("absolute path defaults under src/main are exactly the listed ones") {
+    // literals under the top-level directory of the scratch-root default
+    val top = Tables.DefaultScratchRoot.split('/').take(2).mkString("", "/", "/")
+    val re = ("\"(" + java.util.regex.Pattern.quote(top) + "[^\"]*)\"").r
+    val found = sources.flatMap { case (file, s) =>
+      re.findAllMatchIn(s).map(m => file -> m.group(1)) }.sorted
+    assert(found.map(_._1) == pathDefaultFiles, s"found: $found")
+    assert(found.toMap.get("Tables.scala").contains(Tables.DefaultScratchRoot), s"found: $found")
   }
 }

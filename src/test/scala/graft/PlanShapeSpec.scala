@@ -136,7 +136,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     // a second invocation must REUSE the layout (no assignment recompute):
     // trainQuantizer's posexplode agg would show as an extra job — assert
     // via the stamp file remaining untouched
-    val root = graft.operators.Similarity.ivfRoot(spark, sfDir)
+    val root = graft.io.Artifacts.root(spark, "ivf", sfDir)
     val stampBefore = java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(s"$root/_GRAFT_STAMP"))
     graft.operators.Similarity.ivfAnn(spark, sfDir).collect()

@@ -356,7 +356,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"),
       new java.io.File(corpus, "embeddings.parquet").toPath)
     val emb = new java.io.File(corpus, "embeddings.parquet")
-    spark.conf.set("graft.ivf.root", s"$tmp/ivf")
+    spark.conf.set("graft.scratch.root", tmp.getPath)
     try {
       val (lists1, _) = Similarity.ivfIndex(spark, corpus.getPath)
       val v1Dir = new java.io.File(lists1).getParentFile
@@ -378,7 +378,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
         "v2 is the newest superseded version and keeps its grace")
       assert(Similarity.ivfLists(spark, lists3).count() == v1Rows)
     } finally {
-      spark.conf.unset("graft.ivf.root")
+      spark.conf.unset("graft.scratch.root")
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm)
         f.delete(): Unit

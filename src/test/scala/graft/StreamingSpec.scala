@@ -97,43 +97,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
-  test("G10: decay-average recurrence carries across micro-batches and matches the sequential form") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.{RunDuration, SmoothedRun}
-    val mem = MemoryStream[RunDuration]
-    val q = EventStreams.decayAvgStream(mem.toDS())
-      .writeStream.outputMode("append").format("memory").queryName("g10_out").start()
-    try {
-      // days split ACROSS batches — the recurrence must survive the state store
-      mem.addData(RunDuration("a", 0L, 10.0), RunDuration("a", 1L, 10.0))
-      q.processAllAvailable()
-      mem.addData(RunDuration("a", 3L, 40.0), RunDuration("b", 3L, 5.0))
-      q.processAllAvailable()
-      val got = spark.table("g10_out").as[SmoothedRun].collect()
-        .map(s => (s.source, s.day) -> (s.smoothed, s.anomaly_ratio)).toMap
-      // sequential truth: num/den with w = 0.5^gap
-      def seq(runs: Seq[(Long, Double)]): Map[Long, (Double, Double)] = {
-        var (num, den, prev) = (0.0, 0.0, 0L)
-        runs.map { case (d, v) =>
-          val w = if (den == 0.0) 1.0 else math.pow(0.5, (d - prev).toDouble)
-          num = num * w + v; den = den * w + 1.0; prev = d
-          d -> (math.rint(num / den * 10000) / 10000,
-            math.rint(v / (num / den) * 10000) / 10000)
-        }.toMap
-      }
-      val wantA = seq(Seq(0L -> 10.0, 1L -> 10.0, 3L -> 40.0))
-      wantA.foreach { case (d, w) => assert(got(("a", d)) == w, s"a/$d: ${got(("a", d))} != $w") }
-      // a constant source smooths to itself (ratio 1); a fresh source's
-      // first run is its own baseline
-      assert(got(("a", 0L)) == ((10.0, 1.0)))
-      assert(got(("b", 3L)) == ((5.0, 1.0)))
-      // the day-3 spike scores clearly above its recency-weighted baseline
-      // (the current run is part of its own baseline — same convention as
-      // the batch op — which bounds the ratio; steady days sit at 1.0)
-      assert(got(("a", 3L))._2 > 1.2, s"spike ratio ${got(("a", 3L))._2}")
-    } finally q.stop()
-  }
-
   test("G4: stream-stream interval join (click->purchase attribution)") {
     implicit val sqlCtx = spark.sqlContext
     val clicks = MemoryStream[(java.sql.Timestamp, Long)]

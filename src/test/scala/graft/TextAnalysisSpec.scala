@@ -623,7 +623,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
 
   test("lm scores persist: second consumer serves the stamped layout, zero re-tokenize") {
     val sc = spark.sparkContext
-    val verRoot = new java.io.File(TextAnalysis.lmRoot(spark, sfDir))
+    val verRoot = new java.io.File(graft.io.Artifacts.root(spark, "lm", sfDir))
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
     }
